@@ -9,6 +9,7 @@ semantics are SQL-expressible.
 from __future__ import annotations
 
 import glob
+import importlib
 import json
 import os
 from collections.abc import Callable
@@ -69,53 +70,35 @@ def driver_verified_rounds() -> dict[str, int]:
     return rounds
 
 
+# The beyond-reference registry modules, in registration order.
+# Imported plainly: a module that fails to import fails the registry
+# loudly instead of silently dropping its entries from the bench and
+# the gate.
+REGISTRY_MODULES = (
+    "operators.dedup",
+    "operators.similarity",
+    "functions.text",
+    "operators.multimodal",
+    "operators.corpus",
+    "streaming.incremental",
+    "plans.reporting",
+)
+
+
+def _modules() -> list:
+    return [
+        importlib.import_module(f"priority_data_pipeline_postgres_db_spark.{m}")
+        for m in REGISTRY_MODULES
+    ]
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
     catalog: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     catalog.update(_q.CORE_QUERIES)
     catalog.update(_an.QUERIES)
-    try:  # beyond-reference operator sets land module by module
-        from priority_data_pipeline_postgres_db_spark.operators import dedup as _dd
-
-        catalog.update(_dd.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from priority_data_pipeline_postgres_db_spark.operators import similarity as _sim
-
-        catalog.update(_sim.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from priority_data_pipeline_postgres_db_spark.functions import text as _txt
-
-        catalog.update(_txt.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from priority_data_pipeline_postgres_db_spark.operators import multimodal as _mm
-
-        catalog.update(_mm.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from priority_data_pipeline_postgres_db_spark.operators import corpus as _cp
-
-        catalog.update(_cp.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from priority_data_pipeline_postgres_db_spark.streaming import incremental as _st
-
-        catalog.update(_st.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from priority_data_pipeline_postgres_db_spark.plans import reporting as _rp
-
-        catalog.update(_rp.QUERIES)
-    except ImportError:
-        pass
+    for mod in _modules():
+        catalog.update(mod.QUERIES)
     # Ordering: unverified entries first (new operators land here
     # automatically, in registration order), then the verified tail
     # sorted stalest-first by (last-verified round, key).
@@ -146,18 +129,6 @@ def oracle_sql() -> dict[str, str]:
     oracle: dict[str, str] = {}
     oracle.update(_q.ORACLE)
     oracle.update(_an.ORACLE)
-    for mod_path, attr in (
-        ("priority_data_pipeline_postgres_db_spark.operators.dedup", "ORACLE"),
-        ("priority_data_pipeline_postgres_db_spark.operators.similarity", "ORACLE"),
-        ("priority_data_pipeline_postgres_db_spark.functions.text", "ORACLE"),
-        ("priority_data_pipeline_postgres_db_spark.operators.corpus", "ORACLE"),
-        ("priority_data_pipeline_postgres_db_spark.streaming.incremental", "ORACLE"),
-        ("priority_data_pipeline_postgres_db_spark.plans.reporting", "ORACLE"),
-    ):
-        try:
-            import importlib
-
-            oracle.update(getattr(importlib.import_module(mod_path), attr))
-        except ImportError:
-            pass
+    for mod in _modules():
+        oracle.update(getattr(mod, "ORACLE", {}))
     return oracle

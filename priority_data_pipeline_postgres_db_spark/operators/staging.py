@@ -58,7 +58,8 @@ a shrinking table.  The manifest therefore supports a GENERATION swap:
   so a refresh drops marker and old membership in the same flip.
 - Appenders re-check the generation after adding their entry and
   re-add into the new generation if a swap landed meanwhile; the
-  maintainer's pre-flip sweep covers the other half of that race.
+  maintainer's sweeps of the old generation, one before and one after
+  the flip, cover the other half of that race.
   (Residual window: an appender that crashes between its entry write
   and its re-check WHILE a swap is mid-flight leaves its batch
   entry-less — data intact, recoverable via ``repair_manifest`` —
@@ -513,8 +514,8 @@ class StagingWarehouse:
         change in one atomic pointer replace.
 
         Maintenance-op-only (single maintainer per table); concurrent
-        APPENDS are preserved by the pre-flip sweep plus the appenders'
-        own post-add generation re-check."""
+        APPENDS are preserved by the pre- and post-flip sweeps plus the
+        appenders' own post-add generation re-check."""
         self._manifest_ensure(path)
         mdir = os.path.join(path, MANIFEST_DIR)
         now = time.time()
@@ -537,18 +538,18 @@ class StagingWarehouse:
             os.rename(scratch, new_gdir)  # named but unreferenced: invisible
             # pre-flip sweep: adopt entries appenders committed into the
             # old generation since the snapshot (their own re-check
-            # covers adds landing after this point)
-            try:
-                for bid in self._entry_names(old_gdir) - base - drop_ids:
-                    with open(os.path.join(new_gdir, bid + ".json"), "w") as fh:
-                        json.dump({"batch": bid, "committed_at": now}, fh)
-            except FileNotFoundError:
-                pass  # old gen vanished (out-of-contract twin): proceed
+            # covers adds landing after the flip)
+            self._sweep_entries(old_gdir, new_gdir, base | drop_ids, now)
             # THE flip: one atomic pointer replace (a single PUT)
             cur_tmp = os.path.join(mdir, f".{MANIFEST_CURRENT}.tmp")
             with open(cur_tmp, "w") as fh:
                 json.dump({"gen": gen}, fh)
             os.replace(cur_tmp, os.path.join(mdir, MANIFEST_CURRENT))
+            # post-flip sweep, before the GC below: an appender whose add
+            # AND re-check both landed between the pre-flip sweep and the
+            # flip saw the old generation still live and returned — its
+            # entry exists only there
+            self._sweep_entries(old_gdir, new_gdir, drop_ids, now)
             # GC: the displaced generation (single-maintainer contract —
             # any other g-*/.g-tmp-* dir is a crashed maintainer's
             # garbage, reaped here or by vacuum past its fence)
@@ -566,6 +567,19 @@ class StagingWarehouse:
                         pass
             return
         raise RuntimeError("manifest swap did not stabilize")
+
+    def _sweep_entries(
+        self, old_gdir: str, new_gdir: str, skip: set[str], now: float
+    ) -> None:
+        """Copy the entries of ``old_gdir`` that are missing from
+        ``new_gdir`` and not in ``skip`` into ``new_gdir``."""
+        try:
+            missing = self._entry_names(old_gdir) - self._entry_names(new_gdir) - skip
+        except FileNotFoundError:
+            return  # old gen vanished (out-of-contract twin): proceed
+        for bid in missing:
+            with open(os.path.join(new_gdir, bid + ".json"), "w") as fh:
+                json.dump({"batch": bid, "committed_at": now}, fh)
 
     def _batches(self, path: str) -> list[str]:
         """Committed batch dirs, id-sorted: manifest ∩ listing when the
@@ -1663,11 +1677,20 @@ class StagingWarehouse:
         """Declare the table's upsert contract: latest row per ``pk`` by
         ``order_col`` IS the logical table.  Persisted as a dot-prefixed
         sidecar inside the table dir (invisible to Spark's file listing),
-        so the contract travels with the data, not the session."""
+        so the contract travels with the data, not the session.
+
+        Published like a manifest entry (hidden tmp + ``os.replace``), so
+        a concurrent reader never parses a torn file, and only when the
+        contract changes — a refresh re-declares it on every run."""
+        contract = {"pk": list(pk), "order_col": order_col}
+        if self.upsert_keys(table_name) == contract:
+            return
         path = self._path(table_name)
         os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, UPSERT_META), "w") as f:
-            json.dump({"pk": pk, "order_col": order_col}, f)
+        tmp = os.path.join(path, f".upsert.{uuid.uuid4().hex[:8]}.tmp")
+        with open(tmp, "w") as f:
+            json.dump(contract, f)
+        os.replace(tmp, os.path.join(path, UPSERT_META))
 
     def upsert_keys(self, table_name: str) -> dict | None:
         meta = os.path.join(self._path(table_name), UPSERT_META)

@@ -14,21 +14,48 @@ and optional PK-dedup on append (closing the silent-duplicate gap).
 
 The source is pluggable: any ``EntitySource`` mapping an entity config to a
 nested DataFrame — parquet-backed for tests, the OData DataSource for real
-tenants.  Per-entity errors are captured in the run report and the loop
+tenants.  Per-entity errors are captured in the run report and the run
 continues, matching priorityDataSource.py:173-184.
+
+Concurrency contract of ``refresh_data``.  A refresh is bound by per-job
+fixed costs (scheduling, commit, py4j round trips), not by data, so its
+independent units overlap on one thread pool:
+
+- each entity's *extract* (source read, watermark filter,
+  ``split_subforms``) is one unit;
+- each resulting table part's *load* (exactly-once guard, upsert
+  contract, ``StagingWarehouse.write``) is one unit.  Every part writes
+  its own ``stg_*`` directory; parts that name the same table run in
+  config order inside one unit, so they never race.
+
+Every unit is wrapped with ``inheritable_thread_target(spark)``: the
+caller's job group, description and tags reach every job of the
+refresh.  Workers never wait on each other; only the calling thread
+waits.  The pool holds at most ``defaultParallelism`` workers and never
+more than the units submitted to it.
+
+Watermarks advance on the calling thread, in config order, once every
+part of an entity has been written; an entity with a failed extract or
+a failed part keeps its watermark and gets one error (its first failure
+in part order).  ``RunReport.stg_data_written`` lists every part write
+that succeeded, in config and part order.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import partial
 from typing import Protocol
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+from pyspark.util import inheritable_thread_target
 
 from ..operators.ingest import (
     ExtractionRun,
+    ParsedEntity,
     split_subforms,
     watermark_predicate,
 )
@@ -113,8 +140,13 @@ def append_guard(
     boundary,
     system_timezone: str | None,
 ) -> tuple[DataFrame, list[str]]:
-    """(distinct staged versions an incremental batch could re-deliver,
-    the join columns) — the anti-join side of exactly-once appends.
+    """(staged versions an incremental batch could re-deliver, the join
+    columns) — the right side of the exactly-once ``left_anti`` join.
+
+    No ``distinct``: an anti-join's result does not depend on duplicates
+    on its right side.  A ``distinct`` here cost a shuffle stage per
+    guarded part; without it the planner broadcasts the small overlap
+    window straight into the join.
 
     The batch itself is bounded to ``filterField >= lastRun`` (the
     inclusive watermark), so a staged row can only collide if it sits in
@@ -150,7 +182,7 @@ def append_guard(
         join_cols = [*pk_cols, filter_field.lower()]
     else:
         join_cols = list(pk_cols)
-    return staged.select(*join_cols).distinct(), join_cols
+    return staged.select(*join_cols), join_cols
 
 
 def dedup_append_by_pk(df: DataFrame, pk_cols: list[str], ts_col: str) -> DataFrame:
@@ -159,6 +191,16 @@ def dedup_append_by_pk(df: DataFrame, pk_cols: list[str], ts_col: str) -> DataFr
     rows whose filterField straddles runs (SURVEY.md §7 M3)."""
     w = Window.partitionBy(*pk_cols).orderBy(F.desc(ts_col))
     return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
+
+
+def _run_lane(lane: list) -> None:
+    """Run the part loads that target one table, in config order, and
+    store each outcome (a WriteReport or the exception) in its slot."""
+    for slots, j, load in lane:
+        try:
+            slots[j] = load()
+        except Exception as ex:  # noqa: BLE001 — reported per entity
+            slots[j] = ex
 
 
 class Pipeline:
@@ -205,67 +247,108 @@ class Pipeline:
         # permanently loses rows committed to the source mid-run. The
         # overlap this re-delivers is removed by the PK anti-join below.
         run_start = now_in_system_tz(tz) if tz else None
-        for ent in cfg["entities"]:
-            try:
-                df = self.source.read(self.spark, ent)
-                if ent.get("filterFlag"):
-                    boundary = ent["lastRun"] if incremental else ent["dataStartDate"]
-                    df = df.filter(watermark_predicate(ent["filterField"], boundary, tz))
-                pk = (
-                    self.registry.pk(ent["EntityID"])
-                    if ent["EntityID"] in self.registry
-                    else []
-                )
-                parts = split_subforms(df, ent["EntityID"], pk, run)
-                ff = ent.get("filterField") if ent.get("filterFlag") else None
-                for p in parts:
-                    out_df = p.df
-                    if (
-                        incremental
-                        and self.dedup_append
-                        and pk
-                        and all(c in out_df.columns for c in pk)
-                        and self.warehouse.exists(p.table_name)
-                    ):
-                        part_ff = (
-                            ff if ff and ff.lower() in out_df.columns else None
-                        )
-                        # raw read: the guard wants every staged VERSION in
-                        # the overlap window, not the compacted view
-                        guard, join_cols = append_guard(
-                            self.warehouse.read(p.table_name, raw=True),
-                            pk,
-                            part_ff,
-                            ent.get("lastRun"),
-                            tz,
-                        )
-                        out_df = out_df.join(guard, join_cols, "left_anti")
-                    if self.dedup_append and pk and all(c in out_df.columns for c in pk):
-                        # declare the upsert contract so the DEFAULT read
-                        # is newest-wins per PK (compact-on-read); ordered
-                        # by the watermark column when the entity has one,
-                        # else by the injected extraction timestamp
-                        order_col = (
-                            ff.lower()
-                            if ff and ff.lower() in out_df.columns
-                            else "extractiontimestamputc"
-                        )
-                        if order_col in out_df.columns:
-                            self.warehouse.set_upsert_keys(p.table_name, pk, order_col)
-                    report.stg_data_written.append(
-                        self.warehouse.write(
-                            out_df,
-                            p.table_name,
-                            incremental=incremental,
-                            entity_name=p.entity_name,
-                        )
+        entities = cfg["entities"]
+        # ThreadPoolExecutor starts a worker only when a submitted unit
+        # finds none idle, so the pool never outgrows the unit count
+        with ThreadPoolExecutor(max_workers=self.spark.sparkContext.defaultParallelism) as pool:
+
+            def submit(fn, *args):
+                # wrapped per submission: each unit gets its own copy of
+                # the caller's local properties (job group, tags)
+                return pool.submit(inheritable_thread_target(self.spark)(fn), *args)
+
+            extracts = [submit(self._extract, ent, incremental, tz, run) for ent in entities]
+            # per entity: its extract's exception, or one outcome slot per
+            # part (a WriteReport or the part's exception, filled by a lane)
+            outcomes: list = []
+            lanes: dict[str, list] = {}  # table -> its part loads, config order
+            for ent, fut in zip(entities, extracts):
+                try:
+                    pk, parts = fut.result()
+                except Exception as ex:  # noqa: BLE001 — per-entity error report
+                    outcomes.append(ex)
+                    continue
+                slots = [None] * len(parts)
+                outcomes.append(slots)
+                for j, part in enumerate(parts):
+                    load = partial(self._load_part, part, ent, pk, incremental, tz)
+                    lanes.setdefault(part.table_name, []).append((slots, j, load))
+            loads = [submit(_run_lane, lane) for lane in lanes.values()]
+        for f in loads:
+            f.result()  # the pool has drained; re-raise a non-Exception abort
+        for ent, out in zip(entities, outcomes):
+            outs = [out] if isinstance(out, Exception) else out
+            errs = [o for o in outs if isinstance(o, Exception)]
+            report.stg_data_written.extend(o for o in outs if not isinstance(o, Exception))
+            if not errs:
+                try:
+                    self.control.update_last_run(
+                        self.datasource_id, ent["EntityID"], value=run_start
                     )
-                self.control.update_last_run(
-                    self.datasource_id, ent["EntityID"], value=run_start
-                )
-            except Exception as ex:  # noqa: BLE001 — per-entity error report
-                report.errors.append({"entity": ent["EntityID"], "error": str(ex)})
+                except Exception as ex:  # noqa: BLE001
+                    errs.append(ex)
+            if errs:
+                report.errors.append({"entity": ent["EntityID"], "error": str(errs[0])})
         return report
+
+    def _extract(
+        self, ent: dict, incremental: bool, tz: str | None, run: ExtractionRun
+    ) -> tuple[list[str], list[ParsedEntity]]:
+        """One entity's extract unit: source read, watermark filter and
+        the parent/child split (lazy plans; the loads execute them)."""
+        df = self.source.read(self.spark, ent)
+        if ent.get("filterFlag"):
+            boundary = ent["lastRun"] if incremental else ent["dataStartDate"]
+            df = df.filter(watermark_predicate(ent["filterField"], boundary, tz))
+        pk = self.registry.pk(ent["EntityID"]) if ent["EntityID"] in self.registry else []
+        return pk, split_subforms(df, ent["EntityID"], pk, run)
+
+    def _load_part(
+        self,
+        p: ParsedEntity,
+        ent: dict,
+        pk: list[str],
+        incremental: bool,
+        tz: str | None,
+    ) -> WriteReport:
+        """One table part's load unit: exactly-once guard, upsert
+        contract, staging write."""
+        ff = ent.get("filterField") if ent.get("filterFlag") else None
+        out_df = p.df
+        if (
+            incremental
+            and self.dedup_append
+            and pk
+            and all(c in out_df.columns for c in pk)
+            and self.warehouse.exists(p.table_name)
+        ):
+            part_ff = ff if ff and ff.lower() in out_df.columns else None
+            # raw read: the guard wants every staged VERSION in the
+            # overlap window, not the compacted view
+            guard, join_cols = append_guard(
+                self.warehouse.read(p.table_name, raw=True),
+                pk,
+                part_ff,
+                ent.get("lastRun"),
+                tz,
+            )
+            out_df = out_df.join(guard, join_cols, "left_anti")
+        if self.dedup_append and pk and all(c in out_df.columns for c in pk):
+            # declare the upsert contract so the DEFAULT read is
+            # newest-wins per PK (compact-on-read); ordered by the
+            # watermark column when the entity has one, else by the
+            # injected extraction timestamp
+            order_col = (
+                ff.lower() if ff and ff.lower() in out_df.columns else "extractiontimestamputc"
+            )
+            if order_col in out_df.columns:
+                self.warehouse.set_upsert_keys(p.table_name, pk, order_col)
+        return self.warehouse.write(
+            out_df,
+            p.table_name,
+            incremental=incremental,
+            entity_name=p.entity_name,
+        )
 
     # -- §3.2 initialDataLoad ----------------------------------------------
     def initial_data_load(self) -> dict:

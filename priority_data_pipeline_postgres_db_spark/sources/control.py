@@ -24,6 +24,8 @@ from __future__ import annotations
 
 import json
 import os
+import threading
+import uuid
 from datetime import datetime, timezone
 from zoneinfo import ZoneInfo
 
@@ -50,11 +52,17 @@ def now_in_system_tz(system_timezone: str) -> str:
 
 
 class ControlStore:
-    """Append-only config log + latest-wins reads, JSON-file-backed."""
+    """Append-only config log + latest-wins reads, JSON-file-backed.
+
+    Thread-safe within one process: every read-modify-write of the log
+    and its flush run under one lock, so concurrent callers (a refresh's
+    worker threads, an HTTP server's request threads) never lose an
+    update or publish a half-built log."""
 
     def __init__(self, path: str):
         self.path = path
         self._log: list[dict] = []
+        self._lock = threading.RLock()
         if os.path.exists(path):
             with open(path) as fh:
                 self._log = json.load(fh)
@@ -64,14 +72,16 @@ class ControlStore:
         ``os.replace`` it over the store — a crash mid-flush can never
         corrupt the file (ADVICE r12: the bare ``open(path, 'w')`` left
         a torn-JSON window, sharper now that the skew path writes an
-        artifact per re-probe).  Concurrency contract: the store is
-        SINGLE-WRITER per file (read-modify-write of the full log) —
-        concurrent drivers each get their own control path; the atomic
-        replace protects readers, not multi-writer merges."""
+        artifact per re-probe).  The tmp name is unique per call, so
+        two flushes never share one.  Concurrency contract: one store
+        object per file per process (its lock serializes the threads);
+        concurrent drivers each get their own control path — the atomic
+        replace protects readers, not multi-process merges.  Callers
+        hold ``self._lock``."""
         d = os.path.dirname(self.path) or "."
         os.makedirs(d, exist_ok=True)
         tmp = os.path.join(
-            d, f".{os.path.basename(self.path)}.{os.getpid()}.tmp"
+            d, f".{os.path.basename(self.path)}.{uuid.uuid4().hex}.tmp"
         )
         with open(tmp, "w") as fh:
             json.dump(self._log, fh, indent=1, default=str)
@@ -83,13 +93,15 @@ class ControlStore:
         doc = dict(cfg)
         doc["_datasourceId"] = datasource_id
         doc["submitTimestampUTC"] = datetime.now(timezone.utc).isoformat()
-        self._log.append(doc)
-        self._flush()
+        with self._lock:
+            self._log.append(doc)
+            self._flush()
         return doc
 
     def latest_config(self, datasource_id: str) -> dict | None:
         """S6/O1 — newest config for the datasource (sort DESC, first)."""
-        docs = [d for d in self._log if d.get("_datasourceId") == datasource_id]
+        with self._lock:
+            docs = [d for d in self._log if d.get("_datasourceId") == datasource_id]
         if not docs:
             return None
         return max(docs, key=lambda d: d["submitTimestampUTC"])
@@ -97,15 +109,16 @@ class ControlStore:
     def update_last_run(self, datasource_id: str, entity_id: str, value: str | None = None) -> str:
         """K6 — advance the per-entity watermark in the *latest* config
         (array-filtered update, priorityDataSource.py:600-606)."""
-        cfg = self.latest_config(datasource_id)
-        if cfg is None:
-            raise KeyError(datasource_id)
-        value = value or now_in_system_tz(cfg["systemTimezone"])
-        for ent in cfg["entities"]:
-            if ent["EntityID"] == entity_id:
-                ent["lastRun"] = value
-                self._flush()
-                return value
+        with self._lock:
+            cfg = self.latest_config(datasource_id)
+            if cfg is None:
+                raise KeyError(datasource_id)
+            value = value or now_in_system_tz(cfg["systemTimezone"])
+            for ent in cfg["entities"]:
+                if ent["EntityID"] == entity_id:
+                    ent["lastRun"] = value
+                    self._flush()
+                    return value
         raise KeyError(f"entity {entity_id} not in config {datasource_id}")
 
     # -- generic plan/measurement artifacts (VERDICT r11 #6) -------------
@@ -120,18 +133,20 @@ class ControlStore:
         rec["_artifact"] = kind
         rec["_key"] = key
         rec["submitTimestampUTC"] = datetime.now(timezone.utc).isoformat()
-        self._log.append(rec)
-        self._flush()
+        with self._lock:
+            self._log.append(rec)
+            self._flush()
         return rec
 
     def latest_artifact(self, kind: str, key: str) -> dict | None:
         """Newest artifact for (kind, key) — sort DESC, first, exactly
         the ``latest_config`` read discipline."""
-        docs = [
-            d
-            for d in self._log
-            if d.get("_artifact") == kind and d.get("_key") == key
-        ]
+        with self._lock:
+            docs = [
+                d
+                for d in self._log
+                if d.get("_artifact") == kind and d.get("_key") == key
+            ]
         if not docs:
             return None
         return max(docs, key=lambda d: d["submitTimestampUTC"])

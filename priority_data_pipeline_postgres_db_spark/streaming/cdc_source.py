@@ -146,7 +146,6 @@ class StagingChangesStreamReader(DataSourceStreamReader):
         self.wh = StagingWarehouse(
             None, options["root"], options.get("account", "local")
         )
-        self._fields = [f.name for f in schema.fields if f.name != CHANGE_COL]
         # the exact arrow schema the executor-side read must emit
         # (computed once driver-side; the reader is pickled to the
         # executors with it)
@@ -172,14 +171,21 @@ class StagingChangesStreamReader(DataSourceStreamReader):
         ]
 
     def latestOffset(self) -> dict:
+        """The newest committed id, floored at ``startafter`` and the
+        retention horizon: Spark compares offsets by equality only, so a
+        latest offset that sorted below either would be committed as a
+        step BACKWARDS — re-delivering consumed batches, or raising on a
+        start below the horizon once every batch is folded."""
+        exp = self.wh._expiry(self.table)
+        floor = [self.options.get("startafter", "")]
+        if exp:
+            floor.append(exp["horizon"])
         live = [
             b
             for b in self.wh._live_ids(self.table)
             if not b.endswith(BASE_SUFFIX)
         ]
-        if not live:
-            return self.initialOffset()
-        return {"last": max(live)}
+        return {"last": max(live + floor)}
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
         hi = end.get("last", "")

@@ -92,3 +92,47 @@ def test_unknown_entity_raises(tmp_path):
 
 def test_now_in_system_tz_format():
     assert re.fullmatch(r"\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2}", now_in_system_tz("UTC"))
+
+
+def test_concurrent_watermark_advances_all_persist(tmp_path):
+    """8 threads each advance a different entity's watermark at once:
+    no flush collides on a tmp file, no update is lost, and the file
+    parses and holds all 8 values."""
+    import json
+    import sys
+    import threading
+
+    cfg = dict(CFG)
+    cfg["entities"] = [
+        dict(CFG["entities"][1], EntityID=f"E{i}") for i in range(8)
+    ]
+    s = store(tmp_path)
+    s.insert_config(cfg, datasource_id="ds1")
+    start = threading.Barrier(8)
+    errors = []
+
+    def advance(i):
+        try:
+            start.wait()
+            for k in range(20):
+                s.update_last_run("ds1", f"E{i}", value=f"2025-01-0{i + 1} 00:00:{k:02d}")
+        except Exception as ex:  # noqa: BLE001
+            errors.append(ex)
+
+    threads = [threading.Thread(target=advance, args=(i,)) for i in range(8)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # interleave the threads finely
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors
+    with open(s.path) as fh:
+        log = json.load(fh)
+    got = {e["EntityID"]: e["lastRun"] for e in log[-1]["entities"]}
+    assert got == {f"E{i}": f"2025-01-0{i + 1} 00:00:19" for i in range(8)}
+    assert not [f for f in os.listdir(tmp_path) if f.endswith(".tmp")]

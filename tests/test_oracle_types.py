@@ -50,3 +50,15 @@ def test_no_oracle_emits_hugeint(con):
         "oracles emitting HUGEINT-class columns (pandas→float64, driver hash "
         f"rejects vs Spark int64) — wrap in CAST(... AS BIGINT): {bad}"
     )
+
+
+def test_registry_import_failure_is_loud(monkeypatch):
+    """A registry module that fails to import fails the registry instead
+    of silently dropping its entries and oracles."""
+    import __spark_entry__ as e
+
+    monkeypatch.setattr(e, "REGISTRY_MODULES", (*e.REGISTRY_MODULES, "operators.no_such_module"))
+    with pytest.raises(ModuleNotFoundError):
+        e.queries()
+    with pytest.raises(ModuleNotFoundError):
+        e.oracle_sql()

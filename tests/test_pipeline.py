@@ -2,6 +2,7 @@
 catalog DDL idempotence, per-entity error isolation."""
 
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -261,3 +262,186 @@ def test_watermark_advances_to_run_start_not_completion(spark, tmp_path, sf_dir)
     assert after_run >= before
     done = datetime.utcnow().strftime("%Y-%m-%d %H:%M:%S")
     assert after_run <= done
+
+
+class FrameSource:
+    """EntityID → DataFrame, or → an exception the read raises."""
+
+    def __init__(self, frames):
+        self.frames = frames
+
+    def read(self, spark, entity_cfg):
+        got = self.frames[entity_cfg["EntityID"]]
+        if isinstance(got, Exception):
+            raise got
+        return got
+
+
+def _nested(spark, ids):
+    """A parent entity with an ``ITEMS_SUBFORM`` child array."""
+    return spark.createDataFrame(
+        [(i, f"n{i}", [(10 * i, "a"), (10 * i + 1, "b")]) for i in ids],
+        "ID long, NAME string, ITEMS_SUBFORM array<struct<LINE:long, V:string>>",
+    )
+
+
+def _watermarks(p):
+    return {e["EntityID"]: e["lastRun"] for e in p.control.latest_config("ds1")["entities"]}
+
+
+def test_failed_extract_isolated_reports_in_config_order(spark, tmp_path, sf_dir):
+    """A source that raises for one entity leaves the others written and
+    their watermarks advanced; the failing entity's watermark stays put.
+    The first entity's write is slowed so it finishes last: the report
+    still comes back in config and part order."""
+    p = make_pipeline(
+        spark,
+        str(tmp_path),
+        sf_dir,
+        [entity("EVENTS"), entity("BROKEN"), entity("NESTED")],
+    )
+    p.source = FrameSource(
+        {
+            "EVENTS": spark.read.parquet(f"{sf_dir}/events.parquet").limit(5),
+            "BROKEN": RuntimeError("source down"),
+            "NESTED": _nested(spark, [1, 2, 3]),
+        }
+    )
+    write = p.warehouse.write
+
+    def slow_events_write(df, table_name, **kw):
+        if table_name == "events":
+            time.sleep(1.0)
+        return write(df, table_name, **kw)
+
+    p.warehouse.write = slow_events_write
+    before = _watermarks(p)
+    rep = p.refresh_data(incremental=False)
+
+    assert rep.errors == [{"entity": "BROKEN", "error": "source down"}]
+    assert [(r.table_name, r.records_written) for r in rep.stg_data_written] == [
+        ("stg_events", 5),
+        ("stg_nested", 3),
+        ("stg_items", 6),
+    ]
+    after = _watermarks(p)
+    assert after["BROKEN"] == before["BROKEN"]
+    assert after["EVENTS"] != before["EVENTS"] and after["NESTED"] != before["NESTED"]
+    assert after["EVENTS"] == after["NESTED"]  # both advanced to the run start
+
+
+def test_failed_child_write_keeps_entity_watermark(spark, tmp_path, sf_dir):
+    """A write that fails for a child part: the parent part is still
+    written and reported, the entity reports one error and keeps its
+    watermark, and the other entities advance."""
+    p = make_pipeline(spark, str(tmp_path), sf_dir, [entity("NESTED"), entity("EVENTS")])
+    p.source = FrameSource(
+        {
+            "NESTED": _nested(spark, [1, 2]),
+            "EVENTS": spark.read.parquet(f"{sf_dir}/events.parquet").limit(4),
+        }
+    )
+    write = p.warehouse.write
+
+    def failing_child_write(df, table_name, **kw):
+        if table_name == "items":
+            raise OSError("disk full")
+        return write(df, table_name, **kw)
+
+    p.warehouse.write = failing_child_write
+    before = _watermarks(p)
+    rep = p.refresh_data(incremental=False)
+
+    assert rep.errors == [{"entity": "NESTED", "error": "disk full"}]
+    assert [r.table_name for r in rep.stg_data_written] == ["stg_nested", "stg_events"]
+    after = _watermarks(p)
+    assert after["NESTED"] == before["NESTED"]
+    assert after["EVENTS"] != before["EVENTS"]
+
+
+def test_parts_naming_one_table_write_in_config_order(spark, tmp_path, sf_dir):
+    """Two entities that both land in ``stg_items`` (a flat ITEMS entity
+    and NESTED's child) are written in config order, as a sequential
+    loop would: the later full refresh replaces the earlier one."""
+    p = make_pipeline(spark, str(tmp_path), sf_dir, [entity("ITEMS"), entity("NESTED")])
+    p.source = FrameSource(
+        {
+            "ITEMS": spark.createDataFrame([(99, "z")], "LINE long, V string"),
+            "NESTED": _nested(spark, [1]),
+        }
+    )
+    rep = p.refresh_data(incremental=False)
+    assert not rep.errors
+    assert [r.table_name for r in rep.stg_data_written] == ["stg_items", "stg_nested", "stg_items"]
+    assert sorted(r["line"] for r in p.warehouse.read("items").collect()) == [10, 11]
+
+
+def _scala_list(seq):
+    it = seq.iterator()
+    out = []
+    while it.hasNext():
+        out.append(it.next())
+    return out
+
+
+def _status_jobs(spark):
+    return _scala_list(spark.sparkContext._jsc.sc().statusStore().jobsList(None))
+
+
+def _sql_executions(spark):
+    return _scala_list(spark._jsparkSession.sharedState().statusStore().executionsList())
+
+
+def _guarded_refresh(spark, tmp_path, sf_dir):
+    p = make_pipeline(
+        spark,
+        str(tmp_path),
+        sf_dir,
+        [entity("EVENTS", filterFlag=True, filterField="ts", lastRun="2024-01-20 00:00:00")],
+    )
+    p.dedup_append = True
+    p.refresh_data(incremental=False)
+    p.control.update_last_run("ds1", "EVENTS", value="2024-01-20 00:00:00")
+    return p
+
+
+def test_refresh_jobs_inherit_caller_job_group(spark, tmp_path, sf_dir):
+    """Every job of an incremental refresh carries the caller's job
+    group, although the refresh runs its units on worker threads."""
+    p = _guarded_refresh(spark, tmp_path, sf_dir)
+    sc = spark.sparkContext
+    lo = max((j.jobId() for j in _status_jobs(spark)), default=-1)
+    sc.setJobGroup("g", "caller group")
+    try:
+        rep = p.refresh_data(incremental=True)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert not rep.errors
+    groups = [
+        j.jobGroup().get() if j.jobGroup().isDefined() else None
+        for j in _status_jobs(spark)
+        if j.jobId() > lo
+    ]
+    assert groups and set(groups) == {"g"}
+
+
+def test_guarded_write_broadcasts_the_guard(spark, tmp_path, sf_dir):
+    """The executed plan of a guarded write has no aggregate and no
+    shuffle on the guard side: the overlap window is broadcast into the
+    left_anti join."""
+    p = _guarded_refresh(spark, tmp_path, sf_dir)
+    lo = max((e.executionId() for e in _sql_executions(spark)), default=-1)
+    rep = p.refresh_data(incremental=True)
+    assert not rep.errors
+    plans = [
+        e.physicalPlanDescription()
+        for e in _sql_executions(spark)
+        if e.executionId() > lo and "LeftAnti" in e.physicalPlanDescription()
+    ]
+    assert plans
+    for plan in plans:
+        assert "BroadcastExchange" in plan
+        assert "HashAggregate" not in plan
+        exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
+        assert all("BroadcastExchange" in ln for ln in exchanges), exchanges

@@ -1,6 +1,8 @@
 """Staging warehouse K1/K4: append vs overwrite, naming contract, teardown
 (reference priorityDataSource.py:847-889, sqlDwh.py:85-123)."""
 
+import os
+
 from pyspark.sql import functions as F
 
 from priority_data_pipeline_postgres_db_spark.operators.staging import StagingWarehouse
@@ -918,3 +920,57 @@ def test_maintenance_random_walks_hold_read_identity(spark):
             assert got == model, (seq, name, hive)
 
     run_walk()
+
+
+def test_upsert_sidecar_publish_is_atomic(tmp_path):
+    """A reader polling the upsert contract while it flips between two
+    values always parses one whole contract — never a torn file — and
+    the publish leaves no tmp file behind."""
+    import threading
+
+    wh = StagingWarehouse(None, str(tmp_path))
+    a = {"pk": ["id"], "order_col": "ts"}
+    b = {"pk": ["id", "line"], "order_col": "extractiontimestamputc"}
+    wh.set_upsert_keys("t", a["pk"], a["order_col"])
+    done = threading.Event()
+    seen, errors = [], []
+
+    def reader():
+        while not done.is_set():
+            try:
+                seen.append(wh.upsert_keys("t"))
+            except Exception as ex:  # noqa: BLE001
+                errors.append(ex)
+
+    t = threading.Thread(target=reader)
+    t.start()
+    try:
+        for i in range(400):
+            c = b if i % 2 == 0 else a
+            wh.set_upsert_keys("t", c["pk"], c["order_col"])
+    finally:
+        done.set()
+        t.join(timeout=60)
+    assert not t.is_alive()
+    assert not errors
+    assert seen and all(s in (a, b) for s in seen)
+    assert wh.upsert_keys("t") == a
+    assert [f for f in os.listdir(wh._path("t")) if f.endswith(".tmp")] == []
+
+
+def test_upsert_sidecar_written_only_on_change(tmp_path):
+    """Re-declaring the same contract (every refresh does) leaves the
+    sidecar untouched; a changed contract replaces it."""
+    from priority_data_pipeline_postgres_db_spark.operators.staging import UPSERT_META
+
+    wh = StagingWarehouse(None, str(tmp_path))
+    wh.set_upsert_keys("t", ["id"], "ts")
+    meta = os.path.join(wh._path("t"), UPSERT_META)
+    os.utime(meta, ns=(10**9, 10**9))
+    before = os.stat(meta)
+    wh.set_upsert_keys("t", ["id"], "ts")
+    after = os.stat(meta)
+    assert (after.st_ino, after.st_mtime_ns) == (before.st_ino, 10**9)
+    wh.set_upsert_keys("t", ["id"], "udate")
+    assert os.stat(meta).st_mtime_ns != 10**9
+    assert wh.upsert_keys("t") == {"pk": ["id"], "order_col": "udate"}

@@ -212,3 +212,28 @@ def test_expire_rename_collision_converges(spark, wh, monkeypatch):
     ) == {"b1~base", "b2", "b3"}
     got = sorted(r["k"] for r in wh.read("crash").collect())
     assert got == list(range(40))
+
+
+def test_append_between_sweep_and_flip_survives_swap(tmp_path, monkeypatch):
+    """An append whose entry write AND generation re-check both land
+    after the maintainer's pre-flip sweep but before its flip sees the
+    old generation still live and returns; the swap must still carry
+    that entry into the new generation."""
+    wh = StagingWarehouse(None, str(tmp_path))
+    path = wh._path("t")
+    os.makedirs(path)
+    wh._manifest_add(path, "a")
+    orig = StagingWarehouse._entry_names
+    calls = []
+
+    def entry_names(gdir):
+        names = orig(gdir)
+        calls.append(gdir)
+        if len(calls) == 2:  # the swap's pre-flip sweep has listed
+            wh._manifest_add(path, "late")
+        return names
+
+    monkeypatch.setattr(StagingWarehouse, "_entry_names", staticmethod(entry_names))
+    wh._manifest_swap(path, ["c"], {"a"})
+    monkeypatch.undo()
+    assert wh._manifest_ids(path) == {"c", "late"}

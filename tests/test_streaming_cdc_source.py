@@ -6,9 +6,12 @@ retention-horizon contract."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from priority_data_pipeline_postgres_db_spark.operators.staging import (
+    BASE_SUFFIX,
     SnapshotExpiredError,
     StagingWarehouse,
 )
@@ -200,3 +203,78 @@ def test_stream_entry_matches_polling_twin(spark, sf_dir):
         .collect()
     }
     assert got == expect
+
+
+# one consumer's life: append n batches / expire what it has consumed
+# (keeping `extra` more) / restart its reader / run one micro-batch
+CDC_OPS = st.lists(
+    st.one_of(
+        st.tuples(st.just("append"), st.integers(1, 3)),
+        st.tuples(st.just("expire"), st.integers(0, 2)),
+        st.tuples(st.just("restart"), st.just(0)),
+        st.tuples(st.just("trigger"), st.just(0)),
+    ),
+    max_size=10,
+)
+
+
+@settings(
+    max_examples=15,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(startafter=st.sampled_from(["", "b001", "b004", "c"]), ops=CDC_OPS)
+def test_offsets_monotone_and_batches_delivered_once(spark, startafter, ops):
+    """Under any interleaving of appends, expiries of consumed history
+    and reader restarts, the latest offset never sorts below the
+    consumer's committed offset, and every batch committed after
+    ``startafter`` is delivered exactly once."""
+    root = scratch_dir("cdc_prop_")
+    wh = StagingWarehouse(spark, root, account_id="cdc")
+    opts = {"root": root, "account": "cdc", "table": "feed", "startafter": startafter}
+    schema = spark.createDataFrame([], DDL).schema
+
+    def new_reader():
+        return StagingChangesStreamReader(schema, dict(opts))
+
+    reader = new_reader()
+    cur = reader.initialOffset()
+    committed: list[str] = []
+    delivered: list[int] = []
+
+    def trigger():
+        nonlocal cur
+        end = reader.latestOffset()
+        assert end["last"] >= cur["last"], (cur, end)
+        if end != cur:
+            delivered.extend(r[0] for r in _rows(reader, cur, end))
+            cur = end
+
+    for op, n in [*ops, ("trigger", 0)]:
+        if op == "append":
+            for _ in range(n):
+                bid = f"b{len(committed):03d}"
+                k = 2 * len(committed)
+                wh.write(
+                    spark.createDataFrame([(k, bid), (k + 1, bid)], "k long, v string"),
+                    "feed",
+                    incremental=True,
+                    batch_id=bid,
+                )
+                committed.append(bid)
+        elif op == "expire":
+            unconsumed = [
+                b
+                for b in wh._live_ids("feed")
+                if not b.endswith(BASE_SUFFIX) and b > cur["last"]
+            ]
+            wh.expire_snapshots(
+                "feed", keep_last=len(unconsumed) + n + 1, reap_min_age_sec=0.0
+            )
+        elif op == "restart":
+            reader = new_reader()
+        else:
+            trigger()
+
+    expect = [k for i, b in enumerate(committed) if b > startafter for k in (2 * i, 2 * i + 1)]
+    assert sorted(delivered) == expect
