@@ -27,6 +27,7 @@ engine-portable).
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 from dataclasses import dataclass
 
 import numpy as np
@@ -1298,6 +1299,27 @@ KMEANS_SAMPLE = 10_000
 KMEANS_ITERS = 10
 
 
+def _unit_sample(emb: DataFrame, sample_n: int) -> np.ndarray:
+    """The quantizer fits' and drift probes' shared sample: at most
+    ``sample_n`` quantized vectors in ``xxhash64(vec_id)`` order (a
+    reproducible choice with no RNG state), unit-normalized, as an
+    (n, dim) float64 matrix — (0, 0) for an empty frame.  The int64 →
+    float64 cast is exact: quantized values are integers."""
+    sample = (
+        emb.select("vec_id", quantize_expr().alias("q"))
+        .orderBy(F.xxhash64("vec_id"), "vec_id")
+        .limit(sample_n)
+        .toPandas()
+    )
+    if len(sample) == 0:
+        return np.empty((0, 0))
+    X = np.stack(sample["q"].map(lambda v: np.asarray(v, dtype=np.int64))).astype(
+        np.float64
+    )
+    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
+    return X
+
+
 def fit_ivf_centroids(
     emb: DataFrame,
     k_clusters: int = N_CLUSTERS,
@@ -1316,16 +1338,7 @@ def fit_ivf_centroids(
     centroids unit-normalized), empty clusters keep their previous
     centroid.  Returns a (k_clusters, dim) unit-norm float64 matrix.
     """
-    sample = (
-        emb.select("vec_id", quantize_expr().alias("q"))
-        .orderBy(F.xxhash64("vec_id"), "vec_id")
-        .limit(sample_n)
-        .toPandas()
-    )
-    X = np.stack(sample["q"].map(lambda v: np.asarray(v, dtype=np.int64))).astype(
-        np.float64
-    )
-    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
+    X = _unit_sample(emb, sample_n)
     k_clusters = min(k_clusters, len(X))
     cents = X[:k_clusters].copy()
     for _ in range(iters):
@@ -1338,21 +1351,6 @@ def fit_ivf_centroids(
                 if norm > 0:
                     cents[c] = v / norm
     return cents
-
-
-def assign_cluster_udf(cents: np.ndarray):
-    """pandas UDF: quantized vector → nearest-centroid id (max cosine).
-    The centroid matrix rides the closure (k × dim — tiny), so the corpus
-    is labeled in ONE distributed pass, one numpy matmul per Arrow batch."""
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    @pandas_udf(T.IntegerType())
-    def _assign(qs: pd.Series) -> pd.Series:
-        mat = np.stack(qs.map(lambda v: np.asarray(v, dtype=np.float64)))
-        mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-30)
-        return pd.Series((mat @ cents.T).argmax(axis=1).astype(np.int32))
-
-    return _assign
 
 
 IVF_N_ASSIGN = 2  # corpus-side spill assignment (see assign_clusters_udf)
@@ -1411,13 +1409,18 @@ def ivf_topk(
     is a broadcast equi-join on the computed label — search cost
     ∝ corpus/k_clusters × nprobe instead of corpus."""
     cents = fit_ivf_centroids(emb, k_clusters)
+    q_all = _ivf_postings(emb, cents)
+    return _ivf_probe_and_score(q_all, queries, cents, k=k, nprobe=nprobe)
+
+
+def _ivf_postings(emb: DataFrame, cents: np.ndarray) -> DataFrame:
+    """(vec_id, q, label): one row per spill-assigned inverted-list entry."""
     assign = assign_clusters_udf(cents)
-    q_all = (
+    return (
         emb.select("vec_id", quantize_expr().alias("q"))
         .withColumn("labels", assign(F.col("q")))
         .select("vec_id", "q", F.explode("labels").alias("label"))
     )
-    return _ivf_probe_and_score(q_all, queries, cents, k=k, nprobe=nprobe)
 
 
 def _ivf_probe_and_score(
@@ -1513,6 +1516,38 @@ def _exact_topk_over_candidates(
     )
 
 
+def _index_scratch(spark: SparkSession, prefix: str):
+    """(warehouse, control store) in a fresh scratch dir per invocation
+    (ADVICE r5): a fixed shared path raced between concurrent sessions —
+    one could probe the other's half-built index.  No eager cleanup: the
+    returned frames read the index lazily."""
+    from ..sources.control import ControlStore
+    from .staging import StagingWarehouse
+
+    root = scratch_dir(prefix)
+    control = ControlStore(os.path.join(root, "index_control.json"))
+    return StagingWarehouse(spark, root), control
+
+
+def _load_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The fixture corpus without its ``label`` column: the index
+    operators fit their own quantizers."""
+    emb = load(spark, sf_dir, "embeddings")
+    return emb.drop("label") if "label" in emb.columns else emb
+
+
+def _with_recall(res: DataFrame, emb: DataFrame, queries: DataFrame) -> DataFrame:
+    """``res`` plus each query's in-band ``recall_at_5`` against the
+    exact brute-force top-5 (0.0 for a query with no hit)."""
+    exact = cosine_topk(emb, queries, k=TOP_K).select("query_id", "neighbor_id")
+    recall = (
+        res.join(exact, ["query_id", "neighbor_id"], "left_semi")
+        .groupBy("query_id")
+        .agg((F.count("*") / F.lit(float(TOP_K))).alias("recall_at_5"))
+    )
+    return res.join(recall, "query_id", "left").fillna({"recall_at_5": 0.0})
+
+
 def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF top-k with an embedded ``recall_at_5`` column (VERDICT r3 #8):
     each result row carries its query's recall@5 against the exact
@@ -1522,18 +1557,9 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     costs one extra corpus scan for the 10-query benchmark set — the
     self-measuring harness shape, not the production call (use
     ``ivf_topk`` directly there)."""
-    emb = load(spark, sf_dir, "embeddings")
-    # drop the fixture's label column: the operator fits its own quantizer
-    emb = emb.drop("label") if "label" in emb.columns else emb
+    emb = _load_emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
-    ivf = ivf_topk(emb, queries, k=TOP_K)
-    exact = cosine_topk(emb, queries, k=TOP_K).select("query_id", "neighbor_id")
-    recall = (
-        ivf.join(exact, ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("query_id")
-        .agg((F.count("*") / F.lit(float(TOP_K))).alias("recall_at_5"))
-    )
-    return ivf.join(recall, "query_id", "left").fillna({"recall_at_5": 0.0})
+    return _with_recall(ivf_topk(emb, queries, k=TOP_K), emb, queries)
 
 
 QUERIES["sim_ivf_topk"] = sim_ivf_topk
@@ -2166,21 +2192,12 @@ def build_ivf_index(
     refitting."""
     spark = emb.sparkSession
     cents = fit_ivf_centroids(emb, k_clusters)
-    assign = assign_clusters_udf(cents)
     # spill assignment (assign_clusters_udf): each vector lands in its
     # top-2 lists, so a posting appears in two hive partitions — that IS
     # the boundary-recall trade materialized as index size
-    assigned = (
-        emb.select("vec_id", quantize_expr().alias("q"))
-        .withColumn("labels", assign(F.col("q")))
-        .select("vec_id", "q", F.explode("labels").alias("label"))
-    )
+    assigned = _ivf_postings(emb, cents)
     wh.write(assigned, table, incremental=False, partition_by=["label"])
-    cent_df = spark.createDataFrame(
-        [(int(i), [float(x) for x in cents[i]]) for i in range(len(cents))],
-        "label int, centroid array<double>",
-    )
-    wh.write(cent_df, f"{table}_centroids", incremental=False)
+    wh.write(_cents_to_df(spark, cents), f"{table}_centroids", incremental=False)
     return cents
 
 
@@ -2266,15 +2283,13 @@ def _emb_fingerprint(emb: DataFrame) -> tuple | None:
     the same aggregate, so re-running the agg job per invocation of the
     same lifecycle entry is pure overhead (guide §1.2).  Plans carrying
     non-deterministic expressions bypass that memo and pay the agg."""
-    import os as _os
-
     files = tuple(sorted(emb.inputFiles()))
     if not files:
         return None
     mts = []
     for f in files:
         try:
-            mts.append(_os.path.getmtime(f.removeprefix("file:")))
+            mts.append(os.path.getmtime(f.removeprefix("file:")))
         except OSError:
             mts.append(0.0)
     canon = canonical_plan(emb)
@@ -2308,7 +2323,6 @@ def ivf_centroids_memo(
     (one tiny warehouse read, no sample collect, no Lloyd loop).  The
     fit is deterministic (hash-ordered sample, no RNG), so memo-vs-refit
     is bit-identical — pinned in tests/test_similarity.py."""
-    from ..util import scratch_dir
     from .staging import StagingWarehouse
 
     if fp is None:
@@ -2324,11 +2338,7 @@ def ivf_centroids_memo(
         cents = fit_ivf_centroids(emb, k_clusters, sample_n, iters)
         root = scratch_dir("spark_graft_ivfcent_")
         wh = StagingWarehouse(spark, root)
-        cent_df = spark.createDataFrame(
-            [(int(i), [float(x) for x in cents[i]]) for i in range(len(cents))],
-            "label int, centroid array<double>",
-        )
-        wh.write(cent_df, "ivf_centroids", incremental=False)
+        wh.write(_cents_to_df(spark, cents), "ivf_centroids", incremental=False)
         _CENTROID_ARTIFACTS[key] = root
         return cents
     return load_ivf_centroids(StagingWarehouse(spark, root), table="ivf")
@@ -2339,6 +2349,22 @@ def ivf_centroids_memo(
 # entries re-fit per invocation): (corpus fingerprint, coarse-centroid
 # digest, geometry) -> warehouse root holding the persisted books.
 _PQBOOK_ARTIFACTS: dict[tuple, str] = {}
+
+
+def _digest(arr: np.ndarray | None) -> str | None:
+    """md5 of an array's bytes: a quantizer's identity in memo keys."""
+    import hashlib
+
+    if arr is None:
+        return None
+    return hashlib.md5(np.ascontiguousarray(arr).tobytes()).hexdigest()
+
+
+def _cents_to_df(spark: SparkSession, cents: np.ndarray):
+    return spark.createDataFrame(
+        [(int(i), [float(x) for x in cents[i]]) for i in range(len(cents))],
+        "label int, centroid array<double>",
+    )
 
 
 def _books_to_df(spark: SparkSession, books: np.ndarray):
@@ -2369,9 +2395,6 @@ def pq_codebooks_memo(
     centroid bytes (books fit against different coarse quantizers must
     never share).  Both fits are deterministic, so memo-vs-refit is
     bit-identical.  In-memory frames (no fingerprint) bypass."""
-    import hashlib
-
-    from ..util import scratch_dir
     from .staging import StagingWarehouse
 
     if sample_n is None:
@@ -2380,21 +2403,19 @@ def pq_codebooks_memo(
         iters = PQ_ITERS
     if fp is None:
         fp = _emb_fingerprint(emb)
-    if fp is None:
+
+    def fit():
         if cents is None:
             return fit_pq_codebooks(emb, m, k_codes, sample_n, iters)
         return fit_residual_codebooks(emb, cents, m, k_codes, sample_n, iters)
-    cdigest = (
-        None if cents is None else hashlib.md5(np.ascontiguousarray(cents).tobytes()).hexdigest()
-    )
-    key = (fp, cdigest, m, k_codes, sample_n, iters)
+
+    if fp is None:
+        return fit()
+    key = (fp, _digest(cents), m, k_codes, sample_n, iters)
     root = _PQBOOK_ARTIFACTS.get(key)
     spark = emb.sparkSession
     if root is None:
-        if cents is None:
-            books = fit_pq_codebooks(emb, m, k_codes, sample_n, iters)
-        else:
-            books = fit_residual_codebooks(emb, cents, m, k_codes, sample_n, iters)
+        books = fit()
         root = scratch_dir("spark_graft_pqbooks_")
         wh = StagingWarehouse(spark, root)
         wh.write(_books_to_df(spark, books), "books_codebooks", incremental=False)
@@ -2424,15 +2445,7 @@ def sim_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     float k-means centroids aren't engine-portable): build the
     partitioned index in a throwaway warehouse, then answer the
     benchmark queries through it."""
-
-    from .staging import StagingWarehouse
-
-    # fresh mkdtemp per invocation (ADVICE r5): a fixed shared /tmp path
-    # raced between concurrent sessions — one could probe the other's
-    # half-built index.  No eager cleanup: the returned DataFrame reads
-    # the partitioned index lazily (same contract as stream checkpoints).
-    root = scratch_dir("spark_graft_ivf_index_")
-    wh = StagingWarehouse(spark, root)
+    wh, _ = _index_scratch(spark, "spark_graft_ivf_index_")
     emb = load(spark, sf_dir, "embeddings")
     build_ivf_index(emb, wh)
     return ivf_topk_persisted(wh, emb.filter(F.col("vec_id") < N_QUERIES), k=TOP_K)
@@ -2918,6 +2931,21 @@ def semantic_pairs_sharded(
     the UNFOLDED bucket inside the UDF, then folded, so probes stay
     within shard by construction.
 
+    ``share_hash_pass`` (set by ``semantic_pairs_resharded`` when it
+    runs >1 salted round): the SRP hash pass is salt-INDEPENDENT — only
+    the shard fold over the computed bucket differs per round — so
+    caching the subtree BEFORE the fold lets the R rounds share one
+    Arrow hashing pass over the corpus (CacheManager matches the
+    identical pre-fold plan) and each round re-applies only the cheap
+    md5 fold projection.  Single-round callers keep the r12 shape: the
+    extra materialization barrier has no reuse to pay for it, and the
+    r14 interleaved A/B measured it as a small local LOSS there
+    (dedup_semantic_planned 0.81 pair-min ratio for the revert; the
+    rest of the family read noise).  The ``k == 0`` branch (≤4 planes ⇒
+    gate-scale corpora by the occupancy law) deliberately ignores the
+    flag: one cheap hash pass per round beats a cache barrier there
+    even when rounds > 1, by the same r14 measurement.
+
     Fully deterministic (md5 shards + md5 hyperplanes + integer-cosine
     verify) — replays bit-for-bit in the DuckDB oracle, so the registry
     entry is HASH-GATED, unlike the float-centroid cell path."""
@@ -2937,21 +2965,9 @@ def semantic_pairs_sharded(
             n_shards, salt=salt
         )
 
-    # ``share_hash_pass`` (set by ``semantic_pairs_resharded`` when it
-    # runs >1 salted round): the SRP hash pass is salt-INDEPENDENT —
-    # only the shard fold over the computed bucket differs per round —
-    # so caching the subtree BEFORE the fold lets the R rounds share one
-    # Arrow hashing pass over the corpus (CacheManager matches the
-    # identical pre-fold plan) and each round re-applies only the cheap
-    # md5 fold projection.  Single-round callers keep the r12 shape:
-    # the extra materialization barrier has no reuse to pay for it, and
-    # the r14 interleaved A/B measured it as a small local LOSS there
-    # (dedup_semantic_planned 0.81 pair-min ratio for the revert; the
-    # rest of the family read noise — OPTIMIZATION_r14.md #1).
     if k == 0:
-        # small-shard geometry (≤4 planes ⇒ gate-scale corpora by the
-        # occupancy law): one cheap hash pass per round beats a cache
-        # barrier even when rounds>1 — measured, see above
+        # small-shard geometry: no shared hash cache (``share_hash_pass``
+        # in the docstring)
         capped = _cap_buckets(
             _srp_bucketed(emb, dim, n_planes).withColumn("bucket", fold()),
             max_bucket,
@@ -3800,16 +3816,15 @@ def fit_pq_codebooks(
     Vectors are unit-normalized BEFORE slicing so the ADC dot decomposes
     the cosine: cos(q, x) = Σ_s q_s · x_s ≈ Σ_s q_s · c[s, code_s(x)].
     Returns an (m, k_codes, dim/m) float64 array."""
-    sample = (
-        emb.select("vec_id", quantize_expr().alias("q"))
-        .orderBy(F.xxhash64("vec_id"), "vec_id")
-        .limit(sample_n)
-        .toPandas()
-    )
-    X = np.stack(sample["q"].map(lambda v: np.asarray(v, dtype=np.int64))).astype(
-        np.float64
-    )
-    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
+    return _subspace_lloyd(_unit_sample(emb, sample_n), m, k_codes, iters)
+
+
+def _subspace_lloyd(X: np.ndarray, m: int, k_codes: int, iters: int) -> np.ndarray:
+    """The PQ codebook fit shared by plain and residual codes: Lloyd
+    k-means per subspace slice of the rows of ``X`` (init = first
+    ``k_codes`` rows, empty clusters keep their previous centroid)."""
+    if len(X) == 0:
+        raise ValueError("cannot fit PQ codebooks on an empty sample")
     dim = X.shape[1]
     if dim % m:
         raise ValueError(f"m={m} must divide dim={dim} (use plan_pq)")
@@ -3857,6 +3872,11 @@ def pq_encode_udf(books: np.ndarray):
         return pd.Series(list(codes))
 
     return _encode
+
+
+def _pq_codes(emb: DataFrame, books: np.ndarray) -> DataFrame:
+    """(vec_id, codes): the plain-PQ code table of ``emb``."""
+    return emb.select("vec_id", pq_encode_udf(books)(quantize_expr()).alias("codes"))
 
 
 _ADC_SCHEMA = T.StructType(
@@ -3943,11 +3963,7 @@ def pq_topk(
     is explicit: the exact stage touches rerank·k·n_queries vectors
     regardless of corpus size."""
     books = fit_pq_codebooks(emb, m, k_codes)
-    encode = pq_encode_udf(books)
-    codes_df = emb.select(
-        "vec_id", encode(quantize_expr()).alias("codes")
-    )
-    cand = _pq_adc_shortlist(codes_df, queries, books, rerank_n=rerank * k)
+    cand = _pq_adc_shortlist(_pq_codes(emb, books), queries, books, rerank_n=rerank * k)
     return _pq_rerank(cand, emb, queries, k=k)
 
 
@@ -3970,29 +3986,43 @@ def build_pq_index(
     below it (``_resolve_pq_geometry``, VERDICT r12 #6); explicit
     ``m``/``k_codes`` are honored verbatim.  The codebook fit is
     memoized per (corpus, geometry) through ``pq_codebooks_memo``."""
-    spark = emb.sparkSession
-    # one fingerprint feeds the geometry decision and the codebook memo
-    # (the content aggregate already counts the corpus)
+    _, books = _memo_quantizers(emb, None, m, k_codes)
+    wh.write(_pq_codes(emb, books), table, incremental=False)
+    _write_books_and_stats(emb, wh, table, books)
+    return books
+
+
+def _memo_quantizers(
+    emb: DataFrame, k_clusters: int | None, m: int | None, k_codes: int | None
+) -> tuple[np.ndarray | None, np.ndarray]:
+    """An index build's memoized quantizers: coarse centroids when
+    ``k_clusters`` is given (else ``None``), then the PQ codebooks —
+    fit on residuals against those centroids — in the geometry
+    ``_resolve_pq_geometry`` picks.  One fingerprint evaluation feeds
+    both memos AND the geometry decision (the content aggregate already
+    counts the corpus)."""
     fp = _emb_fingerprint(emb)
     m, k_codes, fit_sample = _resolve_pq_geometry(
         emb, m, k_codes, n=None if fp is None else fp[2]
     )
-    books = pq_codebooks_memo(emb, m, k_codes, sample_n=fit_sample, fp=fp)
-    encode = pq_encode_udf(books)
-    codes = emb.select("vec_id", encode(quantize_expr()).alias("codes"))
-    wh.write(codes, table, incremental=False)
+    cents = None if k_clusters is None else ivf_centroids_memo(emb, k_clusters, fp=fp)
+    books = pq_codebooks_memo(emb, m, k_codes, sample_n=fit_sample, cents=cents, fp=fp)
+    return cents, books
+
+
+def _write_books_and_stats(
+    emb: DataFrame, wh, table: str, books: np.ndarray, cents: np.ndarray | None = None
+) -> None:
+    """The codebook table and the stats table beside an index: the
+    stats hold the training-distribution quantization error, the drift
+    baseline the appends compare new batches against."""
+    spark = emb.sparkSession
     wh.write(_books_to_df(spark, books), f"{table}_codebooks", incremental=False)
-    # training-distribution quantization error: the drift baseline
-    # pq_append compares new batches against (the ivfpq_append twin)
-    train_mse = _pq_quant_mse(emb, books)
-    wh.write(
-        spark.createDataFrame(
-            [("train_quant_mse", float(train_mse))], "metric string, value double"
-        ),
-        f"{table}_stats",
-        incremental=False,
+    train_mse = _quant_mse(emb, books, cents)
+    stats_df = spark.createDataFrame(
+        [("train_quant_mse", float(train_mse))], "metric string, value double"
     )
-    return books
+    wh.write(stats_df, f"{table}_stats", incremental=False)
 
 
 #: (corpus fingerprint, quantizer digests, sample_n) -> quantization MSE.
@@ -4005,41 +4035,27 @@ def build_pq_index(
 _QUANT_MSE_MEMO: dict[tuple, float] = {}
 
 
-def _quant_mse_key(
-    emb: DataFrame, cents: "np.ndarray | None", books: np.ndarray, sample_n: int
-) -> tuple | None:
-    import hashlib
-
+def _quant_mse(
+    emb: DataFrame,
+    books: np.ndarray,
+    cents: np.ndarray | None = None,
+    sample_n: int = PQ_SAMPLE,
+) -> float:
+    """Mean squared PQ reconstruction error over the fits' bounded
+    deterministic sample: per vector, the L2² gap between the
+    unit-normalized vector — with ``cents``, its top-1-list residual —
+    and its per-subspace nearest codes.  THE code-health number: it
+    rises exactly when incoming vectors stop looking like the
+    distribution the frozen codebooks were trained on."""
     fp = _emb_fingerprint(emb)
-    if fp is None:
-        return None
-    cd = (
-        None
-        if cents is None
-        else hashlib.md5(np.ascontiguousarray(cents).tobytes()).hexdigest()
-    )
-    bd = hashlib.md5(np.ascontiguousarray(books).tobytes()).hexdigest()
-    return (fp, cd, bd, sample_n)
-
-
-def _pq_quant_mse(emb: DataFrame, books: np.ndarray, sample_n: int = PQ_SAMPLE) -> float:
-    """Mean squared PQ reconstruction error over a bounded deterministic
-    sample — the plain-PQ twin of ``_residual_quant_mse`` (no coarse
-    quantizer: the error is ||x − x̂||² of the unit-normalized vector
-    against its per-subspace nearest codes)."""
-    key = _quant_mse_key(emb, None, books, sample_n)
+    key = None if fp is None else (fp, _digest(cents), _digest(books), sample_n)
     if key is not None and key in _QUANT_MSE_MEMO:
         return _QUANT_MSE_MEMO[key]
-    sample = (
-        emb.select("vec_id", quantize_expr().alias("q"))
-        .orderBy(F.xxhash64("vec_id"), "vec_id")
-        .limit(sample_n)
-        .toPandas()
-    )
-    if len(sample) == 0:
+    X = _unit_sample(emb, sample_n)
+    if len(X) == 0:
         return 0.0
-    X = np.stack(sample["q"].map(lambda v: np.asarray(v, dtype=np.float64)))
-    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
+    if cents is not None:
+        X = X - cents[(X @ cents.T).argmax(axis=1)]
     m, _, dsub = books.shape
     b2 = (books * books).sum(axis=2)
     err = 0.0
@@ -4075,14 +4091,21 @@ def pq_append(
     reconstruction MSE vs the stored training baseline →
     ``drift_ratio`` / ``refit_recommended``)."""
     books = load_pq_codebooks(wh, table)
-    encode = pq_encode_udf(books)
-    codes = emb_new.select("vec_id", encode(quantize_expr()).alias("codes"))
+    codes = _pq_codes(emb_new, books)
     report = wh.write(codes, table, incremental=True, batch_id=batch_id)
-    new_mse = _pq_quant_mse(emb_new, books)
+    return {
+        "codes_written": report.records_written,
+        **_drift_report(emb_new, wh, table, books, None, drift_refit_ratio),
+    }
+
+
+def _drift_report(emb_new, wh, table, books, cents, drift_refit_ratio) -> dict:
+    """An append's drift instrument: the new batch's quantization MSE
+    against the stored training baseline."""
+    new_mse = _quant_mse(emb_new, books, cents)
     train_mse, baseline = _load_train_mse(wh, table)
     ratio = new_mse / train_mse if train_mse > 0 else float("inf")
     return {
-        "codes_written": report.records_written,
         "new_quant_mse": new_mse,
         "train_quant_mse": train_mse,
         "drift_ratio": ratio,
@@ -4096,14 +4119,13 @@ def _load_train_mse(wh, table: str) -> tuple[float, bool]:
     table.  An index built before the stats table existed has none —
     the append must still COMMIT and report (drift_ratio=inf, no
     baseline) instead of failing after its encode already landed
-    (ADVICE r12 #4)."""
+    (ADVICE r12 #4).  Only a MISSING table means "no baseline": a stats
+    table that exists but is malformed raises."""
     try:
-        stats = {
-            r["metric"]: r["value"] for r in _small_table_rows(wh, f"{table}_stats")
-        }
-    except Exception:
+        rows = _small_table_rows(wh, f"{table}_stats")
+    except FileNotFoundError:
         return 0.0, False
-    mse = stats.get("train_quant_mse")
+    mse = {r["metric"]: r["value"] for r in rows}.get("train_quant_mse")
     return (float(mse), True) if mse is not None else (0.0, False)
 
 
@@ -4147,17 +4169,9 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the `sim_ivf_topk` harness shape.  Floors pinned in
     tests/test_pq.py at two fixture scales, plus the exhaustive-
     shortlist identity (rerank ≥ corpus ⇒ bit-equal to `cosine_topk`)."""
-    emb = load(spark, sf_dir, "embeddings")
-    emb = emb.drop("label") if "label" in emb.columns else emb
+    emb = _load_emb(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
-    pq = pq_topk(emb, queries, k=TOP_K)
-    exact = cosine_topk(emb, queries, k=TOP_K).select("query_id", "neighbor_id")
-    recall = (
-        pq.join(exact, ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("query_id")
-        .agg((F.count("*") / F.lit(float(TOP_K))).alias("recall_at_5"))
-    )
-    return pq.join(recall, "query_id", "left").fillna({"recall_at_5": 0.0})
+    return _with_recall(pq_topk(emb, queries, k=TOP_K), emb, queries)
 
 
 QUERIES["sim_pq_topk"] = sim_pq_topk
@@ -4173,26 +4187,22 @@ def sim_pq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     the append's drift ratio ride in-band.  The append≡build code
     identity and the drift instrument's firing point are pinned in
     tests/test_pq.py."""
-    from .staging import StagingWarehouse
+    return _sim_grown(_PQ, spark, sf_dir, "spark_graft_pq_append_")
 
-    root = scratch_dir("spark_graft_pq_append_")
-    wh = StagingWarehouse(spark, root)
-    emb = load(spark, sf_dir, "embeddings")
-    emb = emb.drop("label") if "label" in emb.columns else emb
+
+def _sim_grown(kind, spark: SparkSession, sf_dir: str, prefix: str) -> DataFrame:
+    """The append registry entries' harness: build the kind's index on
+    the first half of the corpus, append the second half, query the
+    grown index; recall@5 and the append's drift report ride in-band."""
+    wh, _ = _index_scratch(spark, prefix)
+    emb = _load_emb(spark, sf_dir)
     n = memo_count(emb)
-    build_pq_index(emb.filter(F.col("vec_id") < n // 2), wh)
-    rep = pq_append(emb.filter(F.col("vec_id") >= n // 2), wh, batch_id="growth-1")
+    kind.build(emb.filter(F.col("vec_id") < n // 2), wh)
+    rep = kind.append(emb.filter(F.col("vec_id") >= n // 2), wh, batch_id="growth-1")
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
-    res = pq_topk_persisted(wh, emb, queries, k=TOP_K)
-    exact = cosine_topk(emb, queries, k=TOP_K).select("query_id", "neighbor_id")
-    recall = (
-        res.join(exact, ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("query_id")
-        .agg((F.count("*") / F.lit(float(TOP_K))).alias("recall_at_5"))
-    )
+    res = kind.topk(wh, emb, queries, k=TOP_K)
     return (
-        res.join(recall, "query_id", "left")
-        .fillna({"recall_at_5": 0.0})
+        _with_recall(res, emb, queries)
         .withColumn("drift_ratio", F.lit(float(rep["drift_ratio"])))
         .withColumn("refit_recommended", F.lit(bool(rep["refit_recommended"])))
     )
@@ -4223,10 +4233,8 @@ def pq_recall_curve(
     top-k onto the ADC ranks, and read every depth off the same joined
     frame — no repeated pipeline runs."""
     books = fit_pq_codebooks(emb, m, k_codes)
-    encode = pq_encode_udf(books)
-    codes_df = emb.select("vec_id", encode(quantize_expr()).alias("codes"))
     shortlist = _pq_adc_shortlist(
-        codes_df, queries, books, rerank_n=max(reranks)
+        _pq_codes(emb, books), queries, books, rerank_n=max(reranks)
     ).withColumnRenamed("vec_id", "neighbor_id")
     exact = cosine_topk(emb, queries, k=k).select("query_id", "neighbor_id")
     hit = exact.join(shortlist, ["query_id", "neighbor_id"], "left")
@@ -4260,8 +4268,7 @@ def sim_pq_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry entry (rows-only — trained codebooks, like IVF): the
     rerank→recall@5 curve on the benchmark query set.  Monotonicity and
     a floor at the production PQ_RERANK depth are pytest-pinned."""
-    emb = load(spark, sf_dir, "embeddings")
-    emb = emb.drop("label") if "label" in emb.columns else emb
+    emb = _load_emb(spark, sf_dir)
     return pq_recall_curve(emb, emb.filter(F.col("vec_id") < N_QUERIES))
 
 
@@ -4302,37 +4309,9 @@ def fit_residual_codebooks(
     space.  One shared codebook set across lists (the standard IVFPQ
     memory trade: k_clusters × private codebooks would overfit the
     per-list sample anyway)."""
-    sample = (
-        emb.select("vec_id", quantize_expr().alias("q"))
-        .orderBy(F.xxhash64("vec_id"), "vec_id")
-        .limit(sample_n)
-        .toPandas()
-    )
-    X = np.stack(sample["q"].map(lambda v: np.asarray(v, dtype=np.int64))).astype(
-        np.float64
-    )
-    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
-    R = X - cents[(X @ cents.T).argmax(axis=1)]
-    dim = R.shape[1]
-    if dim % m:
-        raise ValueError(f"m={m} must divide dim={dim} (use plan_pq)")
-    dsub = dim // m
-    k_codes = min(k_codes, len(R))
-    books = np.empty((m, k_codes, dsub), dtype=np.float64)
-    for s in range(m):
-        sub = R[:, s * dsub : (s + 1) * dsub]
-        cbs = sub[:k_codes].copy()
-        c2 = (cbs * cbs).sum(axis=1)
-        for _ in range(iters):
-            d2 = c2[None, :] - 2.0 * (sub @ cbs.T)
-            assign = d2.argmin(axis=1)
-            for c in range(k_codes):
-                members = sub[assign == c]
-                if len(members):
-                    cbs[c] = members.mean(axis=0)
-            c2 = (cbs * cbs).sum(axis=1)
-        books[s] = cbs
-    return books
+    X = _unit_sample(emb, sample_n)
+    R = X - cents[(X @ cents.T).argmax(axis=1)]  # minus the nearest centroid
+    return _subspace_lloyd(R, m, k_codes, iters)
 
 
 def ivfpq_encode_udf(cents: np.ndarray, books: np.ndarray, n_assign: int = IVF_N_ASSIGN):
@@ -4403,79 +4382,24 @@ def build_ivfpq_index(
     re-fitting identical quantizers per invocation), and the PQ
     geometry auto-adopts ``plan_pq`` past the trainability bound
     (``_resolve_pq_geometry``, VERDICT r12 #6)."""
-    spark = emb.sparkSession
-    # one fingerprint evaluation feeds both memos AND the geometry
-    # decision (the content aggregate already counts the corpus — no
-    # reason to pay the scan twice or three times per build)
-    fp = _emb_fingerprint(emb)
-    m, k_codes, fit_sample = _resolve_pq_geometry(
-        emb, m, k_codes, n=None if fp is None else fp[2]
+    cents, books = _memo_quantizers(emb, k_clusters, m, k_codes)
+    postings = _ivfpq_postings(emb, cents, books)
+    wh.write(postings, table, incremental=False, partition_by=["label"])
+    wh.write(
+        _cents_to_df(emb.sparkSession, cents), f"{table}_centroids", incremental=False
     )
-    cents = ivf_centroids_memo(emb, k_clusters, fp=fp)
-    books = pq_codebooks_memo(
-        emb, m, k_codes, sample_n=fit_sample, cents=cents, fp=fp
-    )
+    _write_books_and_stats(emb, wh, table, books, cents)
+    return cents, books
+
+
+def _ivfpq_postings(emb: DataFrame, cents: np.ndarray, books: np.ndarray) -> DataFrame:
+    """(vec_id, label, codes): one row per spill-assigned posting."""
     encode = ivfpq_encode_udf(cents, books)
-    postings = (
+    return (
         emb.select("vec_id", encode(quantize_expr()).alias("postings"))
         .select("vec_id", F.explode("postings").alias("p"))
         .select("vec_id", F.col("p.label").alias("label"), F.col("p.codes").alias("codes"))
     )
-    wh.write(postings, table, incremental=False, partition_by=["label"])
-    cent_df = spark.createDataFrame(
-        [(int(i), [float(x) for x in cents[i]]) for i in range(len(cents))],
-        "label int, centroid array<double>",
-    )
-    wh.write(cent_df, f"{table}_centroids", incremental=False)
-    wh.write(_books_to_df(spark, books), f"{table}_codebooks", incremental=False)
-    # training-distribution quantization error: the drift baseline
-    # ivfpq_append compares new batches against (VERDICT r11 #5)
-    train_mse = _residual_quant_mse(emb, cents, books)
-    stats_df = spark.createDataFrame(
-        [("train_quant_mse", float(train_mse))], "metric string, value double"
-    )
-    wh.write(stats_df, f"{table}_stats", incremental=False)
-    return cents, books
-
-
-def _residual_quant_mse(
-    emb: DataFrame, cents: np.ndarray, books: np.ndarray, sample_n: int = PQ_SAMPLE
-) -> float:
-    """Mean squared residual-quantization error over a bounded
-    deterministic sample (the fit's own xxhash64 sample discipline):
-    per vector, the L2² gap between its top-1-list residual and that
-    residual's PQ reconstruction.  THE code-health number: it rises
-    exactly when incoming vectors stop looking like the distribution
-    the frozen codebooks were trained on."""
-    key = _quant_mse_key(emb, cents, books, sample_n)
-    if key is not None and key in _QUANT_MSE_MEMO:
-        return _QUANT_MSE_MEMO[key]
-    sample = (
-        emb.select("vec_id", quantize_expr().alias("q"))
-        .orderBy(F.xxhash64("vec_id"), "vec_id")
-        .limit(sample_n)
-        .toPandas()
-    )
-    if len(sample) == 0:
-        return 0.0
-    X = np.stack(sample["q"].map(lambda v: np.asarray(v, dtype=np.float64)))
-    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
-    lab = np.argmax(X @ cents.T, axis=1)
-    resid = X - cents[lab]
-    m, _, dsub = books.shape
-    b2 = (books * books).sum(axis=2)
-    err = 0.0
-    for s in range(m):
-        sub = resid[:, s * dsub : (s + 1) * dsub]
-        d2 = b2[s][None, :] - 2.0 * (sub @ books[s].T)
-        codes = d2.argmin(axis=1)
-        err += ((sub - books[s][codes]) ** 2).sum()
-    out = float(err / len(X))
-    if key is not None:
-        if len(_QUANT_MSE_MEMO) > 512:
-            _QUANT_MSE_MEMO.clear()  # crude bound; refills on demand
-        _QUANT_MSE_MEMO[key] = out
-    return out
 
 
 def ivfpq_append(
@@ -4510,27 +4434,17 @@ def ivfpq_append(
     ``drift_ratio`` (new/train) plus ``refit_recommended`` (ratio >
     ``drift_refit_ratio``) — the number that tells the user WHEN to pay
     for a refit, instead of guessing a cadence."""
-    spark = emb_new.sparkSession
     cents, books = load_ivfpq(wh, table)
-    encode = ivfpq_encode_udf(cents, books)
-    postings = (
-        emb_new.select("vec_id", encode(quantize_expr()).alias("postings"))
-        .select("vec_id", F.explode("postings").alias("p"))
-        .select("vec_id", F.col("p.label").alias("label"), F.col("p.codes").alias("codes"))
-    )
     report = wh.write(
-        postings, table, incremental=True, partition_by=["label"], batch_id=batch_id
+        _ivfpq_postings(emb_new, cents, books),
+        table,
+        incremental=True,
+        partition_by=["label"],
+        batch_id=batch_id,
     )
-    new_mse = _residual_quant_mse(emb_new, cents, books)
-    train_mse, baseline = _load_train_mse(wh, table)
-    ratio = new_mse / train_mse if train_mse > 0 else float("inf")
     return {
         "postings_written": report.records_written,
-        "new_quant_mse": new_mse,
-        "train_quant_mse": train_mse,
-        "drift_ratio": ratio,
-        "refit_recommended": ratio > drift_refit_ratio,
-        "baseline_available": baseline,
+        **_drift_report(emb_new, wh, table, books, cents, drift_refit_ratio),
     }
 
 
@@ -4658,12 +4572,7 @@ def ivfpq_topk(
     the same stage functions as the persisted path."""
     cents = fit_ivf_centroids(emb, k_clusters)
     books = fit_residual_codebooks(emb, cents, m, k_codes)
-    encode = ivfpq_encode_udf(cents, books)
-    postings = (
-        emb.select("vec_id", encode(quantize_expr()).alias("postings"))
-        .select("vec_id", F.explode("postings").alias("p"))
-        .select("vec_id", F.col("p.label").alias("label"), F.col("p.codes").alias("codes"))
-    )
+    postings = _ivfpq_postings(emb, cents, books)
     cand = _ivfpq_adc_shortlist(
         postings, queries, cents, books, nprobe=nprobe, rerank_n=rerank * k
     )
@@ -4679,26 +4588,12 @@ def sim_ivfpq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``index_generation`` in-band (floors in tests/test_pq.py, plus the
     exhaustive identity: nprobe = k_clusters AND rerank ≥ corpus ⇒
     bit-equal to `cosine_topk`)."""
-    import os as _os
-
-    from ..sources.control import ControlStore
-    from .staging import StagingWarehouse
-
-    root = scratch_dir("spark_graft_ivfpq_index_")
-    wh = StagingWarehouse(spark, root)
-    control = ControlStore(_os.path.join(root, "index_control.json"))
-    emb = load(spark, sf_dir, "embeddings")
-    emb = emb.drop("label") if "label" in emb.columns else emb
+    wh, control = _index_scratch(spark, "spark_graft_ivfpq_index_")
+    emb = _load_emb(spark, sf_dir)
     build_ivfpq_versioned(emb, wh, control)
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
     res = ivfpq_topk_current(wh, control, emb, queries, k=TOP_K)
-    exact = cosine_topk(emb, queries, k=TOP_K).select("query_id", "neighbor_id")
-    recall = (
-        res.join(exact, ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("query_id")
-        .agg((F.count("*") / F.lit(float(TOP_K))).alias("recall_at_5"))
-    )
-    return res.join(recall, "query_id", "left").fillna({"recall_at_5": 0.0})
+    return _with_recall(res, emb, queries)
 
 
 QUERIES["sim_ivfpq_persisted"] = sim_ivfpq_persisted
@@ -4716,31 +4611,7 @@ def sim_ivfpq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     the appended batch vs the training baseline) — the two numbers an
     operator watches on a daily-growth index.  The build(A)+append(B) ≡
     build(A∪B) posting identity is hash-pinned in tests/test_pq.py."""
-    from .staging import StagingWarehouse
-
-    root = scratch_dir("spark_graft_ivfpq_append_")
-    wh = StagingWarehouse(spark, root)
-    emb = load(spark, sf_dir, "embeddings")
-    emb = emb.drop("label") if "label" in emb.columns else emb
-    n = memo_count(emb)
-    half_a = emb.filter(F.col("vec_id") < n // 2)
-    half_b = emb.filter(F.col("vec_id") >= n // 2)
-    build_ivfpq_index(half_a, wh)
-    rep = ivfpq_append(half_b, wh, batch_id="growth-1")
-    queries = emb.filter(F.col("vec_id") < N_QUERIES)
-    res = ivfpq_topk_persisted(wh, emb, queries, k=TOP_K)
-    exact = cosine_topk(emb, queries, k=TOP_K).select("query_id", "neighbor_id")
-    recall = (
-        res.join(exact, ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("query_id")
-        .agg((F.count("*") / F.lit(float(TOP_K))).alias("recall_at_5"))
-    )
-    return (
-        res.join(recall, "query_id", "left")
-        .fillna({"recall_at_5": 0.0})
-        .withColumn("drift_ratio", F.lit(float(rep["drift_ratio"])))
-        .withColumn("refit_recommended", F.lit(bool(rep["refit_recommended"])))
-    )
+    return _sim_grown(_IVFPQ, spark, sf_dir, "spark_graft_ivfpq_append_")
 
 
 QUERIES["sim_ivfpq_append"] = sim_ivfpq_append
@@ -4750,19 +4621,25 @@ QUERIES["sim_ivfpq_append"] = sim_ivfpq_append
 # ---------------------------------------------------------------------------
 # Versioned index generations: drift-triggered refit-and-swap (VERDICT r12 #2)
 # ---------------------------------------------------------------------------
-# ``ivfpq_append`` keeps an index CURRENT under growth, and its drift
+# An append keeps an index CURRENT under growth, and its drift
 # instrument says WHEN the frozen quantizers have aged out — but acting on
 # ``refit_recommended`` needs machinery: at 100 TB a refit re-trains and
 # re-encodes for hours BESIDE live queries, so the new index must build
 # under a different name and become visible in one atomic act.  The index
 # artifact is therefore VERSIONED: generation g lives in physical tables
-# ``<table>__g000g`` (postings + centroids + codebooks + stats), and
-# "current" is published through the ControlStore artifact log — one
-# append to the atomically-replaced control file repoints every reader
-# (the staging-manifest CURRENT discipline, applied to whole indexes).
+# ``<table>__g000g`` (codes + quantizers + stats), and "current" is
+# published through the ControlStore artifact log — one append to the
+# atomically-replaced control file repoints every reader (the
+# staging-manifest CURRENT discipline, applied to whole indexes).
 # Readers resolve the pointer per query; a query planned against the old
 # generation keeps reading its (still-present) tables; superseded
 # generations are reaped AFTER the swap by ``expire_index_generations``.
+# Both index kinds (IVFPQ, plain PQ) run ONE lifecycle: a frozen
+# ``_IndexKind`` names a kind's build / append / persisted-query
+# callables, the component tables of one generation and its compaction
+# arguments (the table-driven binding idiom of PySpark's
+# ``functions._create_function``); the public ``ivfpq_*`` / ``pq_*``
+# lifecycle names bind the kind-generic functions below.
 
 ANN_INDEX_KIND = "ann_index_generation"
 
@@ -4787,56 +4664,59 @@ def resolve_index_table(control, table: str = "ivfpq_index") -> tuple[str, int]:
     return art["physical"], int(art["generation"])
 
 
-def build_ivfpq_versioned(
-    emb: DataFrame,
-    wh,
-    control,
-    table: str = "ivfpq_index",
-    k_clusters: int = N_CLUSTERS,
-    m: int | None = None,
-    k_codes: int | None = None,
-) -> dict:
-    """Generation-1 build of a versioned IVFPQ index: the physical
-    tables land first, THEN the pointer publishes — a reader never
-    resolves to a half-built generation."""
-    phys = _index_physical(table, 1)
-    build_ivfpq_index(emb, wh, table=phys, k_clusters=k_clusters, m=m, k_codes=k_codes)
-    control.put_artifact(ANN_INDEX_KIND, table, {"generation": 1, "physical": phys})
-    return {"generation": 1, "physical": phys}
+@dataclass(frozen=True)
+class _IndexKind:
+    table: str  # default logical table name
+    build: Callable[..., object]  # (emb, wh, table=, **geometry)
+    append: Callable[..., dict]  # (emb_new, wh, table=, batch_id=, drift_refit_ratio=)
+    topk: Callable[..., DataFrame]  # (wh, emb, queries, table=, k=, ...)
+    components: tuple[str, ...]  # table-name suffixes of one generation
+    compact: dict  # rewrite_compact_files arguments
 
 
-def ivfpq_refit(
-    emb_full: DataFrame,
-    wh,
-    control,
-    table: str = "ivfpq_index",
-    *,
-    k_clusters: int = N_CLUSTERS,
-    m: int | None = None,
-    k_codes: int | None = None,
-    keep_generations: int = 1,
-) -> dict:
+_IVFPQ = _IndexKind(
+    "ivfpq_index",
+    build_ivfpq_index,
+    ivfpq_append,
+    ivfpq_topk_persisted,
+    ("", "_centroids", "_codebooks", "_stats"),
+    {"partition_by": ["label"]},
+)
+# the plain code table has no label dirs: it packs to a flat file count
+_PQ = _IndexKind(
+    "pq_index",
+    build_pq_index,
+    pq_append,
+    pq_topk_persisted,
+    ("", "_codebooks", "_stats"),
+    {"n_files": 16},
+)
+
+
+def _publish_generation(kind, emb, wh, control, table, gen, geometry) -> dict:
+    """Build generation ``gen`` into its physical tables, THEN publish
+    the pointer — a reader never resolves to a half-built generation.
+    The artifact append is THE swap: the control store's tmp+replace
+    flush shows readers the old or the new generation wholly."""
+    phys = _index_physical(table, gen)
+    kind.build(emb, wh, table=phys, **geometry)
+    control.put_artifact(ANN_INDEX_KIND, table, {"generation": gen, "physical": phys})
+    return {"generation": gen, "physical": phys}
+
+
+def _refit(kind, emb_full, wh, control, table, keep_generations=1, **geometry) -> dict:
     """Act on ``refit_recommended``: train NEW quantizers on the grown
     corpus, re-encode it into generation g+1 beside the live index,
-    atomically repoint 'current' (one artifact append through the
-    control store's tmp+replace flush — readers see old or new wholly,
-    never a mix), then expire superseded generations.  Queries keep
-    answering against generation g for the entire refit; the swap costs
-    one pointer read.  Returns the new pointer plus the generations
-    reaped."""
-    _, cur_gen = resolve_index_table(control, table)
-    gen = cur_gen + 1
-    phys = _index_physical(table, gen)
-    build_ivfpq_index(
-        emb_full, wh, table=phys, k_clusters=k_clusters, m=m, k_codes=k_codes
-    )
-    control.put_artifact(
-        ANN_INDEX_KIND, table, {"generation": gen, "physical": phys}
-    )  # THE swap
-    reaped = expire_index_generations(
+    atomically repoint 'current', then expire superseded generations.
+    Queries keep answering against generation g for the entire refit;
+    the swap costs one pointer read.  Returns the new pointer plus the
+    generations reaped."""
+    gen = resolve_index_table(control, table)[1] + 1
+    out = _publish_generation(kind, emb_full, wh, control, table, gen, geometry)
+    out["expired"] = expire_index_generations(
         wh, control, table, keep_last=keep_generations
     )
-    return {"generation": gen, "physical": phys, "expired": reaped}
+    return out
 
 
 def expire_index_generations(
@@ -4846,61 +4726,61 @@ def expire_index_generations(
     ``keep_last`` — the snapshot-expiry discipline applied to whole
     index artifacts (reclamation only: the swap already made them
     unreachable through the pointer).  Physical names are deterministic,
-    so crashed-refit leftovers below the horizon are reaped too."""
+    so crashed-refit leftovers below the horizon are reaped too.  Every
+    kind's component suffixes are tried: a component the table's kind
+    never wrote drops as a no-op."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     _, cur_gen = resolve_index_table(control, table)
+    components = dict.fromkeys(c for kind in (_IVFPQ, _PQ) for c in kind.components)
     reaped = []
     for g in range(1, cur_gen - keep_last + 1):
         phys = _index_physical(table, g)
         dropped = False
-        for component in ("", "_centroids", "_codebooks", "_stats"):
+        for component in components:
             dropped = wh.drop_table(phys + component) or dropped
         if dropped:
             reaped.append(phys)
     return reaped
 
 
-def ivfpq_append_current(
-    emb_new: DataFrame,
-    wh,
-    control,
-    table: str = "ivfpq_index",
-    *,
-    batch_id: str | None = None,
-    drift_refit_ratio: float = 2.0,
-) -> dict:
-    """``ivfpq_append`` routed through the generation pointer: new
+def _append_current(kind, emb_new, wh, control, table, **append_kw) -> dict:
+    """The kind's append routed through the generation pointer: new
     vectors land in whichever generation is current, and the report
     carries that generation so an orchestrator can act on
-    ``refit_recommended`` with ``ivfpq_refit``."""
+    ``refit_recommended`` with the refit."""
     phys, gen = resolve_index_table(control, table)
-    rep = ivfpq_append(
-        emb_new, wh, table=phys, batch_id=batch_id,
-        drift_refit_ratio=drift_refit_ratio,
-    )
+    rep = kind.append(emb_new, wh, table=phys, **append_kw)
     rep["generation"] = gen
     return rep
 
 
-def ivfpq_topk_current(
-    wh,
-    control,
-    emb: DataFrame,
-    queries: DataFrame,
-    table: str = "ivfpq_index",
-    k: int = TOP_K,
-    nprobe: int = N_PROBE,
-    rerank: int = IVFPQ_RERANK,
-) -> DataFrame:
+def _topk_current(kind, wh, control, emb, queries, table, **query_kw) -> DataFrame:
     """Query through the generation pointer; the answering generation
     rides in-band so a result can always be traced to the index version
     that produced it."""
     phys, gen = resolve_index_table(control, table)
-    res = ivfpq_topk_persisted(
-        wh, emb, queries, table=phys, k=k, nprobe=nprobe, rerank=rerank
-    )
+    res = kind.topk(wh, emb, queries, table=phys, **query_kw)
     return res.withColumn("index_generation", F.lit(int(gen)))
+
+
+def _compact(wh, control, table, **rewrite_kw) -> dict:
+    """Bin-pack the CURRENT generation's code table.  Every append
+    commits one more ``ingest_batch=`` dir, so after k appends a scan
+    opens O(k) parquet files — at index scale the file listing, not the
+    code bytes, becomes the query cost.  Quantizers, the generation
+    pointer and query results are untouched (result identity pinned in
+    tests/test_pq.py).  Safe beside concurrent appends — the rewrite
+    replaces only the batches it read."""
+    phys, gen = resolve_index_table(control, table)
+    before = len(wh.data_files(phys))
+    wh.rewrite_compact_files(phys, **rewrite_kw)
+    return {
+        "generation": gen,
+        "physical": phys,
+        "files_before": before,
+        "files_after": len(wh.data_files(phys)),
+    }
 
 
 # how many committed posting batches an index generation accumulates
@@ -4910,153 +4790,153 @@ def ivfpq_topk_current(
 INDEX_COMPACT_AFTER_BATCHES = 8
 
 
-def ivfpq_compact(wh, control, table: str = "ivfpq_index") -> dict:
-    """Bin-pack the CURRENT generation's postings.  Every
-    ``ivfpq_append`` commits one more ``ingest_batch=`` dir, so after k
-    appends a probe opens O(k) parquet files per probed label partition
-    — at index scale the file listing, not the code bytes, becomes the
-    query cost.  ``rewrite_compact_files(partition_by=["label"])``
-    collapses the history to ~one file per label dir; quantizers, the
-    generation pointer, and query results are untouched (result
-    identity pinned in tests/test_pq.py).  Safe beside concurrent
-    appends — the rewrite replaces only the batches it read."""
-    phys, gen = resolve_index_table(control, table)
-    before = len(wh.data_files(phys))
-    wh.rewrite_compact_files(phys, partition_by=["label"])
-    return {
-        "generation": gen,
-        "physical": phys,
-        "files_before": before,
-        "files_after": len(wh.data_files(phys)),
-    }
-
-
-def maintain_index(
-    emb_new: DataFrame,
-    wh,
-    control,
-    table: str = "ivfpq_index",
-    *,
-    batch_id: str | None = None,
-    drift_refit_ratio: float = 2.0,
-    emb_full: DataFrame | None = None,
-    compact_after: int = INDEX_COMPACT_AFTER_BATCHES,
-    refit_kwargs: dict | None = None,
+def _maintain(
+    kind, emb_new, wh, control, table, emb_full, compact_after, refit_kw, **append_kw
 ) -> dict:
-    """One hands-free maintenance turn for a versioned IVFPQ index —
-    the orchestration that closes the loop the drift instrument opened:
-    append the batch through the current generation; if the report says
+    """One hands-free maintenance turn for a versioned index — the
+    orchestration that closes the loop the drift instrument opened (the
+    continuously-adaptive maintenance loop of CASS): append the batch
+    through the current generation; if the report says
     ``refit_recommended`` AND the caller supplied the grown corpus
-    (``emb_full``), run ``ivfpq_refit`` (new quantizers, re-encode,
-    atomic pointer swap); otherwise, once the generation's committed
-    batch history passes ``compact_after``, bin-pack the postings
-    (``ivfpq_compact``).  Exactly one heavy action per turn — a refit
-    re-encodes everything anyway, so compaction after it is moot.
+    (``emb_full``), refit (new quantizers, re-encode, atomic pointer
+    swap); otherwise, once the generation's committed batch history
+    passes ``compact_after``, bin-pack it with the kind's compaction
+    arguments.  Exactly one heavy action per turn — a refit re-encodes
+    everything anyway, so compaction after it is moot.
 
     Returns the append report plus ``actions`` (subset of
     {"refit", "compact"}) and the post-turn generation, so a scheduler
     can log what each turn did.  Idempotent per ``batch_id`` like the
     append it wraps.
 
-    A default-geometry refit re-derives (k, m, k_codes) from the GROWN
+    A default-geometry refit re-derives the geometry from the GROWN
     corpus through the planner — intentional: the refit exists because
     the old geometry aged out, and the trainability bound is exactly
     what changed.  Callers that need geometry or retention continuity
-    pass ``refit_kwargs`` (forwarded to ``ivfpq_refit`` verbatim, e.g.
+    pass ``refit_kwargs`` (forwarded to the refit verbatim, e.g.
     ``{"k_clusters": 4, "m": 4, "k_codes": 8, "keep_generations": 2}``)."""
-    rep = ivfpq_append_current(
-        emb_new,
-        wh,
-        control,
-        table=table,
-        batch_id=batch_id,
-        drift_refit_ratio=drift_refit_ratio,
-    )
+    rep = _append_current(kind, emb_new, wh, control, table, **append_kw)
     actions: list[str] = []
     if rep.get("refit_recommended") and emb_full is not None:
-        sw = ivfpq_refit(emb_full, wh, control, table=table, **(refit_kwargs or {}))
+        sw = _refit(kind, emb_full, wh, control, table, **(refit_kw or {}))
         rep["generation"] = sw["generation"]
         actions.append("refit")
     else:
         phys, _gen = resolve_index_table(control, table)
         if len(wh.snapshots(phys)) > compact_after:
-            rep["compact_report"] = ivfpq_compact(wh, control, table=table)
+            rep["compact_report"] = _compact(wh, control, table, **kind.compact)
             actions.append("compact")
     rep["actions"] = actions
     return rep
 
 
-# --- plain-PQ twins of the versioned lifecycle --------------------------
-# pq_append carries the same drift instrument as ivfpq_append, so the
-# plain index deserves the same machinery acting on it.  The generation/
-# pointer/expiry primitives above are already family-agnostic (physical
-# names + the artifact log); these twins just route them through
-# build_pq_index / pq_append / pq_topk_persisted.  Lifecycle pins live
-# beside the IVFPQ ones in tests/test_pq.py; no separate gate entry —
-# the machinery under test is LINE-IDENTICAL to the gate-verified IVFPQ
-# path, only the build/query callables differ.
+def build_ivfpq_versioned(
+    emb: DataFrame,
+    wh,
+    control,
+    table: str = _IVFPQ.table,
+    k_clusters: int = N_CLUSTERS,
+    m: int | None = None,
+    k_codes: int | None = None,
+) -> dict:
+    """Generation-1 build of a versioned IVFPQ index."""
+    geometry = {"k_clusters": k_clusters, "m": m, "k_codes": k_codes}
+    return _publish_generation(_IVFPQ, emb, wh, control, table, 1, geometry)
 
 
 def build_pq_versioned(
     emb: DataFrame,
     wh,
     control,
-    table: str = "pq_index",
+    table: str = _PQ.table,
     m: int | None = None,
     k_codes: int | None = None,
 ) -> dict:
-    """Generation-1 build of a versioned plain-PQ index — tables land
-    first, then the pointer publishes (the ``build_ivfpq_versioned``
-    discipline)."""
-    phys = _index_physical(table, 1)
-    build_pq_index(emb, wh, table=phys, m=m, k_codes=k_codes)
-    control.put_artifact(ANN_INDEX_KIND, table, {"generation": 1, "physical": phys})
-    return {"generation": 1, "physical": phys}
+    """Generation-1 build of a versioned plain-PQ index."""
+    geometry = {"m": m, "k_codes": k_codes}
+    return _publish_generation(_PQ, emb, wh, control, table, 1, geometry)
+
+
+def ivfpq_refit(
+    emb_full: DataFrame,
+    wh,
+    control,
+    table: str = _IVFPQ.table,
+    *,
+    k_clusters: int = N_CLUSTERS,
+    m: int | None = None,
+    k_codes: int | None = None,
+    keep_generations: int = 1,
+) -> dict:
+    """Refit-and-swap a versioned IVFPQ index (``_refit``)."""
+    return _refit(
+        _IVFPQ, emb_full, wh, control, table, keep_generations,
+        k_clusters=k_clusters, m=m, k_codes=k_codes,
+    )
 
 
 def pq_refit(
     emb_full: DataFrame,
     wh,
     control,
-    table: str = "pq_index",
+    table: str = _PQ.table,
     *,
     m: int | None = None,
     k_codes: int | None = None,
     keep_generations: int = 1,
 ) -> dict:
-    """``ivfpq_refit`` for the plain index: new codebooks on the grown
-    corpus, re-encode into generation g+1 beside live queries, one
-    atomic pointer swap, superseded generations expired."""
-    _, cur_gen = resolve_index_table(control, table)
-    gen = cur_gen + 1
-    phys = _index_physical(table, gen)
-    build_pq_index(emb_full, wh, table=phys, m=m, k_codes=k_codes)
-    control.put_artifact(
-        ANN_INDEX_KIND, table, {"generation": gen, "physical": phys}
-    )  # THE swap
-    reaped = expire_index_generations(
-        wh, control, table, keep_last=keep_generations
+    """Refit-and-swap a versioned plain-PQ index (``_refit``)."""
+    return _refit(
+        _PQ, emb_full, wh, control, table, keep_generations, m=m, k_codes=k_codes
     )
-    return {"generation": gen, "physical": phys, "expired": reaped}
+
+
+def ivfpq_append_current(
+    emb_new: DataFrame,
+    wh,
+    control,
+    table: str = _IVFPQ.table,
+    *,
+    batch_id: str | None = None,
+    drift_refit_ratio: float = 2.0,
+) -> dict:
+    """``ivfpq_append`` routed through the generation pointer."""
+    return _append_current(
+        _IVFPQ, emb_new, wh, control, table,
+        batch_id=batch_id, drift_refit_ratio=drift_refit_ratio,
+    )
 
 
 def pq_append_current(
     emb_new: DataFrame,
     wh,
     control,
-    table: str = "pq_index",
+    table: str = _PQ.table,
     *,
     batch_id: str | None = None,
     drift_refit_ratio: float = 2.0,
 ) -> dict:
     """``pq_append`` routed through the generation pointer."""
-    phys, gen = resolve_index_table(control, table)
-    rep = pq_append(
-        emb_new, wh, table=phys, batch_id=batch_id,
-        drift_refit_ratio=drift_refit_ratio,
+    return _append_current(
+        _PQ, emb_new, wh, control, table,
+        batch_id=batch_id, drift_refit_ratio=drift_refit_ratio,
     )
-    rep["generation"] = gen
-    return rep
+
+
+def ivfpq_topk_current(
+    wh,
+    control,
+    emb: DataFrame,
+    queries: DataFrame,
+    table: str = _IVFPQ.table,
+    k: int = TOP_K,
+    nprobe: int = N_PROBE,
+    rerank: int = IVFPQ_RERANK,
+) -> DataFrame:
+    """Query a versioned IVFPQ index through the generation pointer."""
+    return _topk_current(
+        _IVFPQ, wh, control, emb, queries, table, k=k, nprobe=nprobe, rerank=rerank
+    )
 
 
 def pq_topk_current(
@@ -5064,38 +4944,31 @@ def pq_topk_current(
     control,
     emb: DataFrame,
     queries: DataFrame,
-    table: str = "pq_index",
+    table: str = _PQ.table,
     k: int = TOP_K,
     rerank: int = PQ_RERANK,
 ) -> DataFrame:
-    """Query the plain index through the generation pointer; the
-    answering generation rides in-band."""
-    phys, gen = resolve_index_table(control, table)
-    res = pq_topk_persisted(wh, emb, queries, table=phys, k=k, rerank=rerank)
-    return res.withColumn("index_generation", F.lit(int(gen)))
+    """Query a versioned plain-PQ index through the generation pointer."""
+    return _topk_current(_PQ, wh, control, emb, queries, table, k=k, rerank=rerank)
 
 
-def pq_compact(wh, control, table: str = "pq_index", n_files: int = 16) -> dict:
-    """Bin-pack the CURRENT generation's code table.  The plain index
-    has no label partitioning — the ADC scan reads the whole table — so
-    the bound is a flat file count: after k appends the scan opens
-    O(k) files; the rewrite collapses them to ``n_files``."""
-    phys, gen = resolve_index_table(control, table)
-    before = len(wh.data_files(phys))
-    wh.rewrite_compact_files(phys, n_files=n_files)
-    return {
-        "generation": gen,
-        "physical": phys,
-        "files_before": before,
-        "files_after": len(wh.data_files(phys)),
-    }
+def ivfpq_compact(wh, control, table: str = _IVFPQ.table) -> dict:
+    """Bin-pack the current IVFPQ generation to ~one file per label dir."""
+    return _compact(wh, control, table, **_IVFPQ.compact)
 
 
-def maintain_pq_index(
+def pq_compact(
+    wh, control, table: str = _PQ.table, n_files: int = _PQ.compact["n_files"]
+) -> dict:
+    """Bin-pack the current plain-PQ generation into ``n_files`` files."""
+    return _compact(wh, control, table, n_files=n_files)
+
+
+def maintain_index(
     emb_new: DataFrame,
     wh,
     control,
-    table: str = "pq_index",
+    table: str = _IVFPQ.table,
     *,
     batch_id: str | None = None,
     drift_refit_ratio: float = 2.0,
@@ -5103,30 +4976,30 @@ def maintain_pq_index(
     compact_after: int = INDEX_COMPACT_AFTER_BATCHES,
     refit_kwargs: dict | None = None,
 ) -> dict:
-    """``maintain_index`` for the plain index — same turn contract:
-    append; refit-and-swap when drift fired and the grown corpus was
-    supplied; else bin-pack past ``compact_after`` committed batches.
-    Exactly one heavy action per turn."""
-    rep = pq_append_current(
-        emb_new,
-        wh,
-        control,
-        table=table,
-        batch_id=batch_id,
-        drift_refit_ratio=drift_refit_ratio,
+    """One maintenance turn for a versioned IVFPQ index (``_maintain``)."""
+    return _maintain(
+        _IVFPQ, emb_new, wh, control, table, emb_full, compact_after, refit_kwargs,
+        batch_id=batch_id, drift_refit_ratio=drift_refit_ratio,
     )
-    actions: list[str] = []
-    if rep.get("refit_recommended") and emb_full is not None:
-        sw = pq_refit(emb_full, wh, control, table=table, **(refit_kwargs or {}))
-        rep["generation"] = sw["generation"]
-        actions.append("refit")
-    else:
-        phys, _gen = resolve_index_table(control, table)
-        if len(wh.snapshots(phys)) > compact_after:
-            rep["compact_report"] = pq_compact(wh, control, table=table)
-            actions.append("compact")
-    rep["actions"] = actions
-    return rep
+
+
+def maintain_pq_index(
+    emb_new: DataFrame,
+    wh,
+    control,
+    table: str = _PQ.table,
+    *,
+    batch_id: str | None = None,
+    drift_refit_ratio: float = 2.0,
+    emb_full: DataFrame | None = None,
+    compact_after: int = INDEX_COMPACT_AFTER_BATCHES,
+    refit_kwargs: dict | None = None,
+) -> dict:
+    """One maintenance turn for a versioned plain-PQ index (``_maintain``)."""
+    return _maintain(
+        _PQ, emb_new, wh, control, table, emb_full, compact_after, refit_kwargs,
+        batch_id=batch_id, drift_refit_ratio=drift_refit_ratio,
+    )
 
 
 def sim_ivfpq_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5140,16 +5013,8 @@ def sim_ivfpq_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pre-refit ``drift_ratio``, and per-query ``recall_at_5`` vs
     brute force.  Swap-boundary correctness and old-generation expiry
     are pinned in tests/test_pq.py."""
-    import os as _os
-
-    from ..sources.control import ControlStore
-    from .staging import StagingWarehouse
-
-    root = scratch_dir("spark_graft_ivfpq_refit_")
-    wh = StagingWarehouse(spark, root)
-    control = ControlStore(_os.path.join(root, "index_control.json"))
-    emb = load(spark, sf_dir, "embeddings")
-    emb = emb.drop("label") if "label" in emb.columns else emb
+    wh, control = _index_scratch(spark, "spark_graft_ivfpq_refit_")
+    emb = _load_emb(spark, sf_dir)
     n = memo_count(emb)
     build_ivfpq_versioned(emb.filter(F.col("vec_id") < n // 2), wh, control)
     rep = ivfpq_append_current(
@@ -5158,16 +5023,8 @@ def sim_ivfpq_refit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivfpq_refit(emb, wh, control)
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
     res = ivfpq_topk_current(wh, control, emb, queries, k=TOP_K)
-    exact = cosine_topk(emb, queries, k=TOP_K).select("query_id", "neighbor_id")
-    recall = (
-        res.join(exact, ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("query_id")
-        .agg((F.count("*") / F.lit(float(TOP_K))).alias("recall_at_5"))
-    )
-    return (
-        res.join(recall, "query_id", "left")
-        .fillna({"recall_at_5": 0.0})
-        .withColumn("pre_refit_drift_ratio", F.lit(float(rep["drift_ratio"])))
+    return _with_recall(res, emb, queries).withColumn(
+        "pre_refit_drift_ratio", F.lit(float(rep["drift_ratio"]))
     )
 
 
@@ -5191,16 +5048,8 @@ def sim_ivfpq_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the compaction must strictly shrink the probe's file listing).
     Result identity across the compact and the refit-on-drift turn are
     pinned in tests/test_pq.py."""
-    import os as _os
-
-    from ..sources.control import ControlStore
-    from .staging import StagingWarehouse
-
-    root = scratch_dir("spark_graft_ivfpq_maintain_")
-    wh = StagingWarehouse(spark, root)
-    control = ControlStore(_os.path.join(root, "index_control.json"))
-    emb = load(spark, sf_dir, "embeddings")
-    emb = emb.drop("label") if "label" in emb.columns else emb
+    wh, control = _index_scratch(spark, "spark_graft_ivfpq_maintain_")
+    emb = _load_emb(spark, sf_dir)
     n = memo_count(emb)
     build_ivfpq_versioned(emb.filter(F.col("vec_id") < n // 2), wh, control)
     mid = n // 2 + (n - n // 2) // 2

@@ -30,9 +30,11 @@ independent units overlap on one thread pool:
 
 Every unit is wrapped with ``inheritable_thread_target(spark)``: the
 caller's job group, description and tags reach every job of the
-refresh.  Workers never wait on each other; only the calling thread
-waits.  The pool holds at most ``defaultParallelism`` workers and never
-more than the units submitted to it.
+refresh.  That needs PySpark's pinned-thread mode (the default); with
+``PYSPARK_PIN_THREAD`` off a refresh raises before it submits a unit.
+Workers never wait on each other; only the calling thread waits.  The
+pool holds at most ``defaultParallelism`` workers and never more than
+the units submitted to it.
 
 Watermarks advance on the calling thread, in config order, once every
 part of an entity has been written; an entity with a failed extract or
@@ -43,6 +45,7 @@ that succeeded, in config and part order.
 
 from __future__ import annotations
 
+import os
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from functools import partial
@@ -238,6 +241,14 @@ class Pipeline:
 
     # -- §3.1 refreshData --------------------------------------------------
     def refresh_data(self, incremental: bool, *, run: ExtractionRun | None = None) -> RunReport:
+        # PySpark's own test (java_gateway): unpinned, the wrapper
+        # factory returns the session itself and every unit would fail
+        if os.environ.get("PYSPARK_PIN_THREAD", "true").lower() != "true":
+            raise RuntimeError(
+                "refresh_data runs its units on worker threads and needs "
+                "PySpark's pinned-thread mode; unset PYSPARK_PIN_THREAD or "
+                "set it to 'true'"
+            )
         cfg = self._config()
         run = run or ExtractionRun()
         report = RunReport(extraction_id=run.run_id)

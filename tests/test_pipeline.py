@@ -445,3 +445,21 @@ def test_guarded_write_broadcasts_the_guard(spark, tmp_path, sf_dir):
         assert "HashAggregate" not in plan
         exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
         assert all("BroadcastExchange" in ln for ln in exchanges), exchanges
+
+
+def test_refresh_refuses_unpinned_thread_mode(spark, tmp_path, sf_dir, monkeypatch):
+    """With PYSPARK_PIN_THREAD off, inheritable_thread_target(session)
+    returns the session instead of a wrapper, so every unit would fail
+    obscurely: the refresh refuses with a clear error before it starts a
+    pool or submits a unit."""
+    import priority_data_pipeline_postgres_db_spark.plans.pipeline as pipeline_mod
+
+    p = make_pipeline(spark, str(tmp_path), sf_dir, [entity("EVENTS")])
+
+    def no_pool(*a, **kw):
+        raise AssertionError("refresh_data started a pool")
+
+    monkeypatch.setattr(pipeline_mod, "ThreadPoolExecutor", no_pool)
+    monkeypatch.setenv("PYSPARK_PIN_THREAD", "false")
+    with pytest.raises(RuntimeError, match="pinned-thread"):
+        p.refresh_data(incremental=True)

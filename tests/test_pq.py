@@ -1053,3 +1053,81 @@ def test_maintain_pq_index_compacts_and_refits(spark, sf_dir):
     assert rep["refit_recommended"], rep
     assert rep["actions"] == ["refit"]
     assert resolve_index_table(control2, "pq_index") == ("pq_index__g0002", 2)
+
+
+def test_pq_compact_preserves_queries_and_bounds_files(spark, sf_dir):
+    """The plain-PQ compaction: after k appends through the generation
+    pointer, pq_compact bin-packs the CURRENT code table into at most
+    ``n_files`` files as one batch, and queries answer row-for-row as
+    before the rewrite."""
+    import os
+
+    from priority_data_pipeline_postgres_db_spark.operators.similarity import (
+        build_pq_versioned,
+        pq_append_current,
+        pq_compact,
+        pq_topk_current,
+        resolve_index_table,
+    )
+    from priority_data_pipeline_postgres_db_spark.operators.staging import (
+        StagingWarehouse,
+    )
+    from priority_data_pipeline_postgres_db_spark.sources.control import ControlStore
+
+    emb = _emb(spark, sf_dir)
+    n = emb.count()
+    root = scratch_dir("spark_graft_pq_cf_")
+    wh = StagingWarehouse(spark, root)
+    control = ControlStore(os.path.join(root, "ctl.json"))
+    queries = emb.filter(F.col("vec_id") < N_QUERIES)
+
+    build_pq_versioned(emb.filter(F.col("vec_id") < n // 3), wh, control)
+    for i, lo, hi in ((1, n // 3, 2 * n // 3), (2, 2 * n // 3, n)):
+        pq_append_current(
+            emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi)),
+            wh,
+            control,
+            batch_id=f"grow-{i}",
+        )
+    phys, _ = resolve_index_table(control, "pq_index")
+    before = (
+        pq_topk_current(wh, control, emb, queries, k=5)
+        .orderBy("query_id", "rank")
+        .toPandas()
+    )
+    rep = pq_compact(wh, control, n_files=2)
+    assert rep["physical"] == phys
+    assert rep["files_after"] <= 2 < rep["files_before"]
+    assert len(wh.snapshots(phys)) == 1
+    after = (
+        pq_topk_current(wh, control, emb, queries, k=5)
+        .orderBy("query_id", "rank")
+        .toPandas()
+    )
+    cols = ["query_id", "neighbor_id", "rank"]
+    assert after[cols].values.tolist() == before[cols].values.tolist()
+
+
+def test_append_raises_on_malformed_stats_table(spark, sf_dir):
+    """Only a MISSING stats table means "no drift baseline"
+    (test_append_on_pre_stats_index_still_commits): a stats table that
+    exists but lacks its ``metric`` column is a fault the append must
+    surface, not report as baseline_available=False."""
+    from priority_data_pipeline_postgres_db_spark.operators.similarity import (
+        pq_append,
+    )
+    from priority_data_pipeline_postgres_db_spark.operators.staging import (
+        StagingWarehouse,
+    )
+
+    emb = _emb(spark, sf_dir)
+    n = emb.count()
+    wh = StagingWarehouse(spark, scratch_dir("spark_graft_badstats_"))
+    build_pq_index(emb.filter(F.col("vec_id") < n // 2), wh)
+    wh.write(
+        spark.createDataFrame([(1.0,)], "value double"),
+        "pq_index_stats",
+        incremental=False,
+    )
+    with pytest.raises(KeyError):
+        pq_append(emb.filter(F.col("vec_id") >= n // 2), wh, batch_id="g1")
