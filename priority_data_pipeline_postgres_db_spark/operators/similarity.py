@@ -4091,19 +4091,23 @@ def pq_append(
     reconstruction MSE vs the stored training baseline →
     ``drift_ratio`` / ``refit_recommended``)."""
     books = load_pq_codebooks(wh, table)
+    train = _load_train_mse(wh, table)
     codes = _pq_codes(emb_new, books)
     report = wh.write(codes, table, incremental=True, batch_id=batch_id)
     return {
         "codes_written": report.records_written,
-        **_drift_report(emb_new, wh, table, books, None, drift_refit_ratio),
+        **_drift_report(emb_new, books, None, train, drift_refit_ratio),
     }
 
 
-def _drift_report(emb_new, wh, table, books, cents, drift_refit_ratio) -> dict:
+def _drift_report(emb_new, books, cents, train, drift_refit_ratio) -> dict:
     """An append's drift instrument: the new batch's quantization MSE
-    against the stored training baseline."""
+    against the stored training baseline ``train``, the
+    ``_load_train_mse`` pair.  Appends load that pair BEFORE they
+    write, so a malformed stats table fails the call before any
+    commit."""
     new_mse = _quant_mse(emb_new, books, cents)
-    train_mse, baseline = _load_train_mse(wh, table)
+    train_mse, baseline = train
     ratio = new_mse / train_mse if train_mse > 0 else float("inf")
     return {
         "new_quant_mse": new_mse,
@@ -4435,6 +4439,7 @@ def ivfpq_append(
     ``drift_refit_ratio``) — the number that tells the user WHEN to pay
     for a refit, instead of guessing a cadence."""
     cents, books = load_ivfpq(wh, table)
+    train = _load_train_mse(wh, table)
     report = wh.write(
         _ivfpq_postings(emb_new, cents, books),
         table,
@@ -4444,7 +4449,7 @@ def ivfpq_append(
     )
     return {
         "postings_written": report.records_written,
-        **_drift_report(emb_new, wh, table, books, cents, drift_refit_ratio),
+        **_drift_report(emb_new, books, cents, train, drift_refit_ratio),
     }
 
 

@@ -28,7 +28,10 @@ def ensure_session_confs(spark: SparkSession) -> None:
     grading driver constructs its own SparkSession): without nanosAsLong
     the events.parquet TIMESTAMP(NANOS) read THROWS, and a non-UTC session
     timezone shifts collected timestamps relative to the DuckDB oracle.
-    All four are runtime-settable; no-ops on sessions from get_spark."""
+    All four are runtime-settable; no-ops on sessions from get_spark.
+    Static confs cannot be applied here: ``get_spark``'s codegen cache
+    size (``spark.sql.codegen.cache.maxEntries``) takes effect only when
+    the session is built, so a foreign session keeps its own."""
     for k, v in (
         ("spark.sql.legacy.parquet.nanosAsLong", "true"),
         ("spark.sql.session.timeZone", "UTC"),
@@ -44,21 +47,25 @@ def ensure_session_confs(spark: SparkSession) -> None:
 def normalize_events_ts(df: DataFrame) -> DataFrame:
     """Normalize the events `ts` column to session-TZ TIMESTAMP regardless of
     the parquet physical type the driver generated this round.  Works on both
-    batch and streaming DataFrames (schema-only dispatch)."""
-    ts_type = df.schema["ts"].dataType
-    if isinstance(ts_type, T.LongType):
+    batch and streaming DataFrames (schema-only dispatch).  The column is
+    matched case-insensitively, like Spark's resolver; a frame without one
+    (an ``EVENTS`` entity keyed by other columns) passes through."""
+    ts = next((f for f in df.schema.fields if f.name.lower() == "ts"), None)
+    if ts is None:
+        return df
+    if isinstance(ts.dataType, T.LongType):
         # TIMESTAMP(NANOS) parquet read as long (nanosAsLong); truncate
         # to micros with INTEGER division — double division loses
         # precision at 1e18 ns and rounds the last microsecond,
         # diverging from the DuckDB oracle's truncation.
-        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if isinstance(ts_type, T.TimestampNTZType):
+        return df.withColumn(ts.name, F.timestamp_micros(F.expr(f"`{ts.name}` div 1000")))
+    if isinstance(ts.dataType, T.TimestampNTZType):
         # timestamp[us] with isAdjustedToUTC=false reads as
         # TIMESTAMP_NTZ; the engine (and the DuckDB oracle, whose
         # session is UTC) treats wall-clock == UTC, so the NTZ→LTZ cast
         # under the UTC session timezone is value-preserving.  LTZ keeps
         # the ts→long epoch casts the queries rely on legal.
-        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+        return df.withColumn(ts.name, F.col(ts.name).cast("timestamp"))
     return df
 
 

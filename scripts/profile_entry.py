@@ -11,7 +11,9 @@ the Python call that issued it.
 Method matches bench.py: one warm-up execution (worker spin-up, codegen,
 operator-internal fit memos), clearCache, then the profiled run through
 the noop sink.  Prints the cumulative-time top table restricted to
-package frames plus the raw total.
+package frames plus the raw total, and the timed run's codegen compile
+count (``COMPILES=``: generated classes the run missed in Spark's codegen
+cache).
 """
 
 from __future__ import annotations
@@ -35,7 +37,7 @@ def main() -> None:
     args = ap.parse_args()
 
     import __spark_entry__ as e
-    from priority_data_pipeline_postgres_db_spark.session import get_spark
+    from priority_data_pipeline_postgres_db_spark.session import codegen_compiles, get_spark
 
     spark = get_spark("profile")
     spark.sparkContext.setLogLevel("ERROR")
@@ -46,11 +48,13 @@ def main() -> None:
     spark.catalog.clearCache()
 
     prof = cProfile.Profile()
+    c0 = codegen_compiles(spark)
     t0 = time.time()
     prof.enable()
     fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
     prof.disable()
     wall = time.time() - t0
+    compiles = codegen_compiles(spark) - c0
 
     buf = io.StringIO()
     st = pstats.Stats(prof, stream=buf)
@@ -59,7 +63,7 @@ def main() -> None:
     # and the blocking py4j/socket view: where the driver actually waits
     st.print_stats(r"socket|readinto|send_command", 8)
     print(buf.getvalue())
-    print(f"WALL={wall:.3f}s entry={args.entry}")
+    print(f"WALL={wall:.3f}s COMPILES={compiles} entry={args.entry}")
 
 
 if __name__ == "__main__":

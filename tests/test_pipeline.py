@@ -463,3 +463,34 @@ def test_refresh_refuses_unpinned_thread_mode(spark, tmp_path, sf_dir, monkeypat
     monkeypatch.setenv("PYSPARK_PIN_THREAD", "false")
     with pytest.raises(RuntimeError, match="pinned-thread"):
         p.refresh_data(incremental=True)
+
+
+def test_refresh_events_entity_without_ts_column(spark, tmp_path, sf_dir):
+    """The parquet loader normalizes an ``events`` table's ``ts`` column;
+    an ``EVENTS`` entity whose source has no such column (here keyed by
+    ``UDATE``) must still refresh, and an upper-case ``TS`` is matched
+    like Spark's case-insensitive resolver matches it."""
+    from datetime import datetime
+
+    from priority_data_pipeline_postgres_db_spark.plans.tables import normalize_events_ts
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(1, datetime(2024, 1, 10), 1.0), (2, datetime(2024, 1, 12), 2.0)],
+        "EVENT_ID long, UDATE timestamp, VALUE double",
+    ).write.parquet(f"{src}/events.parquet")
+    p = make_pipeline(
+        spark,
+        str(tmp_path),
+        src,
+        [entity("EVENTS", filterFlag=True, filterField="UDATE", lastRun="2024-01-05 00:00:00")],
+    )
+    rep = p.refresh_data(incremental=True)
+    assert not rep.errors
+    assert rep.total_records() == 2
+    assert p.warehouse.read("events").count() == 2
+
+    upper = spark.createDataFrame([(1, datetime(2024, 1, 10))], "EVENT_ID long, TS timestamp_ntz")
+    out = normalize_events_ts(upper)
+    assert out.columns == ["EVENT_ID", "TS"]
+    assert out.schema["TS"].dataType.typeName() == "timestamp"

@@ -1131,3 +1131,32 @@ def test_append_raises_on_malformed_stats_table(spark, sf_dir):
     )
     with pytest.raises(KeyError):
         pq_append(emb.filter(F.col("vec_id") >= n // 2), wh, batch_id="g1")
+
+
+def test_append_reads_stats_before_it_commits(spark, sf_dir):
+    """An append loads its drift baseline before it writes: a malformed
+    stats table fails the call with no batch committed, so the index's
+    snapshots are unchanged and a retry with the same ``batch_id`` is
+    not swallowed as an already-landed no-op."""
+    from priority_data_pipeline_postgres_db_spark.operators.similarity import (
+        build_ivfpq_index,
+        ivfpq_append,
+        pq_append,
+    )
+    from priority_data_pipeline_postgres_db_spark.operators.staging import (
+        StagingWarehouse,
+    )
+
+    emb = _emb(spark, sf_dir)
+    n = emb.count()
+    wh = StagingWarehouse(spark, scratch_dir("spark_graft_stats_first_"))
+    old, new = emb.filter(F.col("vec_id") < n // 2), emb.filter(F.col("vec_id") >= n // 2)
+    build_pq_index(old, wh)
+    build_ivfpq_index(old, wh)
+    bad_stats = spark.createDataFrame([(1.0,)], "value double")
+    for table, append in (("pq_index", pq_append), ("ivfpq_index", ivfpq_append)):
+        wh.write(bad_stats, f"{table}_stats", incremental=False)
+        before = wh.snapshots(table)
+        with pytest.raises(KeyError):
+            append(new, wh, batch_id="g1")
+        assert wh.snapshots(table) == before, table
