@@ -8,12 +8,12 @@ Postgres sink lives in sources.jdbc), with an **atomic batch-commit
 protocol** on top of plain parquet (VERDICT r1: "idempotent staging
 appends without Delta"):
 
-- every write lands in a hidden scratch dir ``.tmp-<batch>`` inside the
-  table directory — names starting with ``.`` are invisible to Spark's
-  file listing, so readers can NEVER observe a half-written batch;
-- the scratch dir is ``os.rename``d to ``ingest_batch=<batch>`` (one
-  same-filesystem directory rename) only after the write finished, then
-  the batch id is committed to the MANIFEST (below) — a crashed write
+- every write lands in a hidden scratch dir ``.tmp-<batch>-<uuid>``
+  inside the table directory — names starting with ``.`` are invisible
+  to Spark's file listing — together with its zone-map sidecar, and is
+  ``os.rename``d to ``ingest_batch=<batch>`` only after the write
+  finished;
+- the batch is committed by its MANIFEST entry (below) — a crashed write
   leaves an ignored orphan, not phantom rows;
 - the table is therefore hive-partitioned by ``ingest_batch`` (readers
   drop the column), and user ``partition_by`` columns nest inside each
@@ -23,87 +23,60 @@ appends without Delta"):
   re-executed (re-counting it would re-run the whole source read — a
   second full OData fetch per entity in production).
 
-MANIFEST — object-store-safe batch membership (VERDICT r11 #1).  POSIX
-rename + directory listing is sound on ext4 but unsound on S3/GCS, where
-rename is copy+delete and a listing is not a transaction.  Committed-
-batch membership therefore lives in ``.manifest/`` inside the table dir
-(dot-prefixed: invisible to Spark's listing): one tiny entry file
-``<batch_id>.json`` per committed batch, created atomically (hidden tmp
-+ ``os.replace`` on POSIX; the equivalent single PUT on an object store
-— an entry OBJECT either exists whole or not at all, so a torn manifest
-append is impossible by construction: the torn bytes sit under a hidden
-tmp name readers never parse).  The Iceberg/Delta move in miniature,
-with the entry's NAME as the membership fact — readers never parse
-entry content.
+MANIFEST.  Committed-batch membership lives in ``.manifest/`` inside the
+table dir (dot-prefixed: invisible to Spark's listing), in one layout
+from a table's first commit on:
 
-MANIFEST GENERATIONS (VERDICT r12 #4).  Per-entry commits make APPENDS
-atomic, but a maintenance op that replaces many batches with one
-(full refresh, compact, clustered rewrite) would otherwise flip
-visibility one entry at a time — a concurrent reader mid-sequence sees
-a shrinking table.  The manifest therefore supports a GENERATION swap:
+- ``.manifest/CURRENT`` names the live generation dir
+  ``.manifest/g-<id>/``, which holds one entry file ``<batch_id>.json``
+  per committed batch and the table's retention marker
+  (``.expiry.json``, see ``expire_snapshots``) when one stands.  The
+  entry's NAME is the membership fact — readers never parse entry
+  content, and an entry is created atomically (hidden tmp +
+  ``os.replace``), so a torn entry write is invisible.
+- The first commit of a table builds ``CURRENT`` and its first
+  generation under a hidden scratch dir and publishes them with ONE
+  rename to ``.manifest``: a table dir has no manifest (nothing
+  committed) or a whole one.  Two racing first commits each build their
+  own; the loser discards its scratch dir and commits into the winner's.
+- A table dir without ``.manifest`` has no committed batch: nothing is
+  ever read from a directory listing alone.
 
-- ``.manifest/CURRENT`` (when present) names the live generation dir
-  ``.manifest/g-<id>/`` holding the entry files; without ``CURRENT``
-  the entries sit directly in ``.manifest/`` (generation 0 — the r12
-  layout, still written by plain appends on never-refreshed tables).
-- A replace-style op builds the ENTIRE post-state entry set under a
-  hidden scratch dir, sweeps in entries concurrent appenders added
-  meanwhile, renames it to ``g-<id>``, and commits with ONE atomic
-  ``os.replace`` of ``CURRENT`` (one PUT on an object store).  Readers
-  resolve entries and the retention marker from a single generation
-  snapshot, so a refresh is exactly one visibility flip — never a
-  shrinking or duplicated table.
-- The retention marker (``.expiry.json``) lives INSIDE the generation
-  dir once a table is on the generation layout (table root before),
-  so a refresh drops marker and old membership in the same flip.
-- Appenders re-check the generation after adding their entry and
-  re-add into the new generation if a swap landed meanwhile; the
-  maintainer's sweeps of the old generation, one before and one after
-  the flip, cover the other half of that race.
-  (Residual window: an appender that crashes between its entry write
-  and its re-check WHILE a swap is mid-flight leaves its batch
-  entry-less — data intact, recoverable via ``repair_manifest`` —
-  the same crash-window contract as a writer dying before its entry.)
-
-COMMIT MODES (VERDICT r12 #1).  ``commit_mode="rename"`` (default)
-stages data under a hidden scratch dir and renames it into place —
-correct and cheap on POSIX.  ``commit_mode="direct"`` removes the last
-rename from the data path for object stores, where a directory rename
-is an N-object copy: parquet is written STRAIGHT into
-``ingest_batch=<id>/`` and the manifest entry (or generation flip) is
-the ONLY commit act.  Safe because manifest reads plan over explicit
-committed paths — an entry-less dir never reaches the file listing.
-The crash-healing rule flips accordingly: in direct mode a dir without
-an entry may be INCOMPLETE data, so a retry REWRITES it (mode
-overwrite) instead of adopting it, and ``repair_manifest(adopt=True)``
-is the only adoption path.  Direct mode narrows one concurrency corner:
-two writers racing the SAME explicit batch id must be serialized by
-the caller (they would overwrite one directory concurrently); auto ids
-and sequential retries keep the exactly-once contract.
+GENERATION SWAP.  A replace-style op (full refresh, compact, rewrite,
+row-level DML) builds the ENTIRE post-state entry set under a hidden
+scratch dir, renames it to ``g-<id>``, and commits with ONE atomic
+``os.replace`` of ``CURRENT``.  Readers resolve entries and the
+retention marker from a single generation snapshot (``_snapshot_state``,
+which raises ``StagingReadError`` if the generation never settles), so a
+refresh is exactly one visibility flip — never a shrinking or
+duplicated table — and it drops the marker with the old membership.
+Appenders re-check the generation after adding their entry and re-add
+into the new generation if a swap landed meanwhile; the maintainer's
+sweeps of the old generation, one before and one after the flip, cover
+the other half of that race.  (Residual window: an appender that
+crashes between its entry write and its re-check WHILE a swap is
+mid-flight leaves its batch entry-less — data intact, recoverable via
+``repair_manifest`` — the same crash-window contract as a writer dying
+before its entry.)
 
 - COMMIT POINT: the manifest entry.  The data rename alone is not a
   commit — a dir without an entry is invisible (the crash window
   between rename and entry-create heals on the idempotent retry, which
-  finds the dir and re-commits the entry; with no retry, ``vacuum``
-  reaps it past the mtime fence).
-- DELETE POINT: entry removal, BEFORE the data unlink — so a reader can
-  never observe a half-deleted batch (the old rmtree-only refresh could
-  expose partial batches mid-unlink; now visibility flips per batch in
-  one atomic unlink of the entry, and the data dirs are reclaimed as
-  invisible garbage afterwards).
+  finds the complete dir and re-commits the entry; with no retry,
+  ``vacuum`` reaps it past the mtime fence).
+- DELETE POINT: entry removal (or the swap that drops it), BEFORE the
+  data unlink — so a reader never observes a half-deleted batch; the
+  data dirs are reclaimed as invisible garbage afterwards.
 - READ RESOLUTION: manifest ∩ listed dirs (``_batches``) — robust to
   both crash windows (an entry-less dir and a ghost entry are each
-  invisible).  Tables that predate the manifest (no ``.manifest/``)
-  fall back to pure directory listing; the first write to such a table
-  SEEDS the manifest from the listing (every listed dir was POSIX-
-  rename committed), built in a hidden scratch dir and published with
-  one rename so a crash mid-seed cannot hide old batches.
+  invisible).  Reads plan over the explicit committed paths, so an
+  uncommitted dir never reaches Spark's file listing.
 
 Full refreshes clear committed batches *after* the replacement batch is
 fully written, so a crash mid-refresh can leave the table short
 (re-runnable), never duplicated or partially visible — the same
 at-worst-empty contract as the reference's ``if_exists='replace'``
-drop-and-load, strengthened by the per-batch atomic visibility flip.
+drop-and-load, strengthened by the single visibility flip.
 """
 
 from __future__ import annotations
@@ -127,11 +100,12 @@ BASE_SUFFIX = "~base"  # '~' sorts after every alnum, so base > its horizon
 
 
 class StagingReadError(Exception):
-    """Raised when a manifest table has NO committed batches but
-    uncommitted ``ingest_batch=`` dirs exist: falling back to a root
-    listing would expose crash-window or half-deleted data (ADVICE r12).
-    Adopt recoverable dirs via ``repair_manifest(adopt=True)`` or reap
-    them via ``vacuum``."""
+    """Raised when a table's committed state cannot be read: it has no
+    committed batch (a table dir is never read through a bare listing —
+    any uncommitted ``ingest_batch=`` dirs there may be crash-window or
+    half-deleted data; adopt them via ``repair_manifest(adopt=True)`` or
+    reap them via ``vacuum``), or its manifest generation did not settle
+    (``_snapshot_state``)."""
 
 
 class ExpectationFailedError(Exception):
@@ -308,21 +282,10 @@ class StagingWarehouse:
     account ``acc_<accountID>`` (priorityDataSource.py:64 — dash swapped for
     underscore: Spark namespaces disallow ``-``)."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        root: str,
-        account_id: str = "local",
-        commit_mode: str = "rename",
-    ):
-        if commit_mode not in ("rename", "direct"):
-            raise ValueError(
-                f"commit_mode must be 'rename' or 'direct', got {commit_mode!r}"
-            )
+    def __init__(self, spark: SparkSession, root: str, account_id: str = "local"):
         self.spark = spark
         self.root = root
         self.account_id = account_id
-        self.commit_mode = commit_mode
 
     def _path(self, table_name: str) -> str:
         return os.path.join(self.root, f"acc_{self.account_id}", STG_PREFIX + table_name.lower())
@@ -337,42 +300,22 @@ class StagingWarehouse:
 
     @staticmethod
     def _entries_dir(mdir: str) -> str:
-        """The live generation's entries dir: ``.manifest/g-<id>`` when
-        ``CURRENT`` points there, else ``.manifest`` itself (generation
-        0 — the pre-generation layout)."""
-        try:
-            with open(os.path.join(mdir, MANIFEST_CURRENT)) as fh:
-                return os.path.join(mdir, json.load(fh)["gen"])
-        except FileNotFoundError:
-            return mdir
+        """The live generation dir ``.manifest/g-<id>`` that ``CURRENT``
+        names; ``FileNotFoundError`` when the table has no manifest."""
+        with open(os.path.join(mdir, MANIFEST_CURRENT)) as fh:
+            return os.path.join(mdir, json.load(fh)["gen"])
 
     @staticmethod
     def _entry_names(gdir: str) -> set[str]:
         """Entry ids in one generation dir.  Membership is the entry
         file's NAME: hidden tmp files (a torn entry write) never parse
         as entries, so a crash mid-append cannot corrupt the committed
-        set.  ``CURRENT`` and ``g-*`` subdirs lack the ``.json`` suffix
-        and never read as entries."""
+        set.  The retention marker is hidden too."""
         return {
             f[: -len(".json")]
             for f in os.listdir(gdir)
             if f.endswith(".json") and not f.startswith(".")
         }
-
-    def _manifest_ids(self, path: str) -> set[str] | None:
-        """Committed batch ids per the manifest's live generation, or
-        ``None`` when the table predates the manifest protocol (legacy
-        listing fallback)."""
-        mdir = os.path.join(path, MANIFEST_DIR)
-        if not os.path.isdir(mdir):
-            return None
-        for _ in range(5):
-            gdir = self._entries_dir(mdir)
-            try:
-                return self._entry_names(gdir)
-            except FileNotFoundError:
-                continue  # generation GC'd mid-read: re-resolve CURRENT
-        return set()
 
     @staticmethod
     def _read_marker(meta_path: str) -> dict | None:
@@ -382,85 +325,87 @@ class StagingWarehouse:
         except FileNotFoundError:
             return None
 
-    def _snapshot_state(self, path: str) -> tuple[set[str] | None, dict | None]:
-        """(committed ids | None-for-legacy, retention marker | None)
-        resolved from ONE generation snapshot: a reader must never mix
-        the entry set of one generation with the marker of another
-        across a concurrent swap (the refresh flip changes both
-        together).  Retries when the generation it sampled is swapped
-        or GC'd mid-read."""
+    def _snapshot_state(self, path: str) -> tuple[set[str], dict | None]:
+        """(committed ids, retention marker | None) resolved from ONE
+        generation snapshot: a reader must never mix the entry set of one
+        generation with the marker of another across a concurrent swap
+        (the refresh flip changes both together).  Retries when the
+        generation it sampled is swapped or GC'd mid-read, and raises
+        ``StagingReadError`` when it never settles.  A table without a
+        manifest has no committed batch."""
         mdir = os.path.join(path, MANIFEST_DIR)
         if not os.path.isdir(mdir):
-            return None, self._read_marker(os.path.join(path, EXPIRY_META))
-        ids: set[str] = set()
-        exp: dict | None = None
+            return set(), None
         for _ in range(8):
-            gdir = self._entries_dir(mdir)
             try:
+                gdir = self._entries_dir(mdir)
                 ids = self._entry_names(gdir)
+                exp = self._read_marker(os.path.join(gdir, EXPIRY_META))
+                if self._entries_dir(mdir) == gdir:
+                    return ids, exp
             except FileNotFoundError:
-                continue
-            exp = self._read_marker(
-                os.path.join(gdir, EXPIRY_META)
-                if gdir != mdir
-                else os.path.join(path, EXPIRY_META)
-            )
-            if self._entries_dir(mdir) == gdir:
-                return ids, exp
-        return ids, exp  # swap storm (out-of-contract): best effort
+                continue  # generation GC'd mid-read: re-resolve CURRENT
+        raise StagingReadError(
+            f"{path}: the manifest generation did not settle — generation "
+            "swaps landing faster than a read (out-of-contract concurrent "
+            "maintainers?), or a manifest without CURRENT"
+        )
 
-    def _marker_path(self, path: str) -> str:
-        """Where the retention marker lives NOW: inside the live
-        generation dir on generation-layout tables (so a swap drops it
-        atomically with old membership), at the table root before."""
-        mdir = os.path.join(path, MANIFEST_DIR)
-        if os.path.isdir(mdir):
-            gdir = self._entries_dir(mdir)
-            if gdir != mdir:
-                return os.path.join(gdir, EXPIRY_META)
-        return os.path.join(path, EXPIRY_META)
+    @staticmethod
+    def _write_generation(
+        gdir: str, ids, marker: dict | None, now: float
+    ) -> None:
+        """Create the generation dir ``gdir`` holding one entry per id
+        and, when given, the retention marker."""
+        os.makedirs(gdir)
+        for bid in ids:
+            with open(os.path.join(gdir, bid + ".json"), "w") as fh:
+                json.dump({"batch": bid, "committed_at": now}, fh)
+        if marker is not None:
+            with open(os.path.join(gdir, EXPIRY_META), "w") as fh:
+                json.dump(marker, fh)
 
-    def _manifest_ensure(self, path: str) -> None:
-        """SEED a missing manifest from the directory listing (legacy
-        tables migrate losslessly — every listed dir was POSIX-rename
-        committed), built under a hidden scratch dir and published with
-        one rename: a crash mid-seed leaves readers on the listing
-        fallback, never on a partial manifest that hides old batches."""
-        mdir = os.path.join(path, MANIFEST_DIR)
-        if os.path.isdir(mdir):
-            return
-        tmp = os.path.join(path, f".manifest-seed-{uuid.uuid4().hex[:8]}")
-        os.makedirs(tmp)
-        for d in self._listed(path):
-            bid = d.split("=", 1)[1]
-            with open(os.path.join(tmp, bid + ".json"), "w") as fh:
-                json.dump({"batch": bid, "seeded": True}, fh)
+    def _manifest_init(self, path: str, ids, marker: dict | None = None) -> bool:
+        """A table's FIRST commit: build ``CURRENT`` and a first
+        generation holding ``ids`` under a hidden scratch dir and publish
+        them with one rename to ``.manifest``.  False when a concurrent
+        first commit won the race — its manifest is live, and this
+        scratch dir is discarded."""
+        gen = f"g-{uuid.uuid4().hex[:12]}"
+        scratch = os.path.join(path, f".tmp-manifest-{uuid.uuid4().hex[:8]}")
+        self._write_generation(os.path.join(scratch, gen), ids, marker, time.time())
+        with open(os.path.join(scratch, MANIFEST_CURRENT), "w") as fh:
+            json.dump({"gen": gen}, fh)
         try:
-            os.rename(tmp, mdir)
+            os.rename(scratch, os.path.join(path, MANIFEST_DIR))
+            return True
         except OSError:
-            if os.path.isdir(mdir):
-                # lost the seed race to a concurrent writer: their
-                # manifest is live
-                shutil.rmtree(tmp, ignore_errors=True)
-            else:
+            shutil.rmtree(scratch, ignore_errors=True)
+            if not os.path.isdir(os.path.join(path, MANIFEST_DIR)):
                 raise
+            return False
 
     def _manifest_add(self, path: str, batch_id: str) -> None:
         """Commit ``batch_id`` to the manifest — THE commit point for an
-        append.  One atomic object creation (tmp + ``os.replace``; a PUT
-        on an object store).  Idempotent: re-adding an id replaces the
-        entry with identical membership meaning.
+        append.  One atomic object creation (tmp + ``os.replace``), or the
+        table's first generation (``_manifest_init``).  Idempotent:
+        re-adding an id replaces the entry with identical membership
+        meaning.
 
         Generation-safe: after the entry lands, re-check that the
         generation it landed in is still live; if a concurrent swap
         moved ``CURRENT`` meanwhile, re-add into the new generation
-        (the swap's pre-flip sweep covers the mirror half of the race —
-        see the module docstring for the residual crash window)."""
-        self._manifest_ensure(path)
+        (the swap's sweeps cover the mirror half of the race — see the
+        module docstring for the residual crash window)."""
         mdir = os.path.join(path, MANIFEST_DIR)
         payload = json.dumps({"batch": batch_id, "committed_at": time.time()})
         for _ in range(8):
-            gdir = self._entries_dir(mdir)
+            try:
+                gdir = self._entries_dir(mdir)
+            except FileNotFoundError:
+                if self._manifest_init(path, [batch_id]):
+                    return
+                continue
             entry_tmp = os.path.join(gdir, f".{uuid.uuid4().hex[:8]}.tmp")
             try:
                 with open(entry_tmp, "w") as fh:
@@ -479,13 +424,14 @@ class StagingWarehouse:
     def _manifest_remove(self, path: str, batch_id: str) -> None:
         """Uncommit ``batch_id`` — one atomic unlink of the entry, done
         BEFORE the data dir is reclaimed so a half-deleted batch is
-        never visible.  A no-op on legacy tables and already-removed
-        entries (idempotent, race-tolerant)."""
+        never visible.  A no-op on tables without a manifest and on
+        already-removed entries (idempotent, race-tolerant)."""
         mdir = os.path.join(path, MANIFEST_DIR)
-        if not os.path.isdir(mdir):
-            return
         for _ in range(8):
-            gdir = self._entries_dir(mdir)
+            try:
+                gdir = self._entries_dir(mdir)
+            except FileNotFoundError:
+                return
             try:
                 os.remove(os.path.join(gdir, batch_id + ".json"))
             except FileNotFoundError:
@@ -511,36 +457,37 @@ class StagingWarehouse:
         overrides that for ops that must PRESERVE retention across the
         swap (``delete_rows``): it is written into the scratch
         generation before the rename, so marker and membership still
-        change in one atomic pointer replace.
+        change in one atomic pointer replace.  On a table without a
+        manifest the post-state becomes its first generation.
 
         Maintenance-op-only (single maintainer per table); concurrent
         APPENDS are preserved by the pre- and post-flip sweeps plus the
         appenders' own post-add generation re-check."""
-        self._manifest_ensure(path)
         mdir = os.path.join(path, MANIFEST_DIR)
         now = time.time()
         for _ in range(5):
-            old_gdir = self._entries_dir(mdir)
+            try:
+                old_gdir = self._entries_dir(mdir)
+            except FileNotFoundError:
+                if self._manifest_init(path, add_ids, marker):
+                    return
+                continue
             try:
                 base = self._entry_names(old_gdir)
             except FileNotFoundError:
                 continue
             gen = f"g-{uuid.uuid4().hex[:12]}"
             scratch = os.path.join(mdir, f".g-tmp-{gen}")
-            os.makedirs(scratch)
-            for bid in (base - drop_ids) | set(add_ids):
-                with open(os.path.join(scratch, bid + ".json"), "w") as fh:
-                    json.dump({"batch": bid, "committed_at": now}, fh)
-            if marker is not None:
-                with open(os.path.join(scratch, EXPIRY_META), "w") as fh:
-                    json.dump(marker, fh)
+            self._write_generation(
+                scratch, (base - drop_ids) | set(add_ids), marker, now
+            )
             new_gdir = os.path.join(mdir, gen)
             os.rename(scratch, new_gdir)  # named but unreferenced: invisible
             # pre-flip sweep: adopt entries appenders committed into the
             # old generation since the snapshot (their own re-check
             # covers adds landing after the flip)
             self._sweep_entries(old_gdir, new_gdir, base | drop_ids, now)
-            # THE flip: one atomic pointer replace (a single PUT)
+            # THE flip: one atomic pointer replace
             cur_tmp = os.path.join(mdir, f".{MANIFEST_CURRENT}.tmp")
             with open(cur_tmp, "w") as fh:
                 json.dump({"gen": gen}, fh)
@@ -555,16 +502,8 @@ class StagingWarehouse:
             # garbage, reaped here or by vacuum past its fence)
             for d in os.listdir(mdir):
                 full = os.path.join(mdir, d)
-                if d == gen or d == MANIFEST_CURRENT:
-                    continue
-                if os.path.isdir(full):
+                if d != gen and os.path.isdir(full):
                     shutil.rmtree(full, ignore_errors=True)
-                elif d.endswith(".json"):
-                    # stale generation-0 root entries after the first swap
-                    try:
-                        os.remove(full)
-                    except FileNotFoundError:
-                        pass
             return
         raise RuntimeError("manifest swap did not stabilize")
 
@@ -582,15 +521,93 @@ class StagingWarehouse:
                 json.dump({"batch": bid, "committed_at": now}, fh)
 
     def _batches(self, path: str) -> list[str]:
-        """Committed batch dirs, id-sorted: manifest ∩ listing when the
-        manifest exists (an entry-less dir is a crash-window orphan; a
-        ghost entry points at reclaimed data — both invisible), plain
-        listing on legacy tables."""
-        listed = self._listed(path)
-        man = self._manifest_ids(path)
-        if man is None:
-            return listed
-        return [d for d in listed if d.split("=", 1)[1] in man]
+        """Committed batch dirs, id-sorted: manifest ∩ listing (an
+        entry-less dir is a crash-window orphan; a ghost entry points at
+        reclaimed data — both invisible)."""
+        ids = self._snapshot_state(path)[0]
+        return [d for d in self._listed(path) if d.split("=", 1)[1] in ids]
+
+    def _stage_batch(
+        self,
+        df: DataFrame,
+        path: str,
+        batch_id: str,
+        *,
+        partition_by: list[str] | None = None,
+        carry: tuple[str, list[str]] | None = None,
+        adopt_twin: bool = False,
+    ) -> tuple[str, dict | None]:
+        """Write ``df`` as the physical batch ``ingest_batch=<batch_id>``:
+        parquet into a fresh hidden scratch dir (a driver-side write for
+        small local frames), the files ``carry = (src_dir, rel_paths)``
+        hard-linked in beside it, the zone-map sidecar, then ONE rename
+        into place.  The batch is not committed — that is the caller's
+        manifest act.
+
+        Returns ``(status, sidecar)``: ``"empty"`` when no parquet file
+        was written (the scratch dir is removed, nothing renamed),
+        ``"twin"`` when ``adopt_twin`` and a complete dir already holds
+        the name (a concurrent twin's data; the scratch dir is
+        discarded), else ``"written"``.  Any other dir at the name is
+        crash-window garbage and is replaced.  The sidecar is
+        best-effort: ``None`` when it failed, and reads fail open."""
+        from . import stats as _zm
+
+        # unique scratch per in-flight write: two concurrent writers (or
+        # a retry racing its crashed twin) with the SAME batch_id must
+        # never share one — an overwrite would clobber the other's files
+        scratch = os.path.join(path, f".tmp-{batch_id}-{uuid.uuid4().hex[:8]}")
+        if not partition_by and _local_writable(df):
+            # small driver-local frame: skip the distributed writer (see
+            # _write_local_batch — same committed layout, no Spark job)
+            _write_local_batch(df, scratch)
+        else:
+            writer = df.write.mode("overwrite")
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            writer.parquet(scratch)
+        if carry:
+            # provably-clean files ride along verbatim: hard link (same
+            # filesystem by construction), copy as fallback — never read,
+            # decoded, or re-encoded
+            src, rels = carry
+            for rel in rels:
+                dst = os.path.join(scratch, rel)
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                if os.path.exists(dst):  # name clash (never in practice)
+                    head, tail = os.path.split(dst)
+                    dst = os.path.join(head, f"carried-{uuid.uuid4().hex[:6]}-{tail}")
+                try:
+                    os.link(os.path.join(src, rel), dst)
+                except OSError:
+                    shutil.copy2(os.path.join(src, rel), dst)
+        if not _has_parquet_files(scratch):
+            shutil.rmtree(scratch, ignore_errors=True)
+            return "empty", None
+        # zone-map sidecar (operators/stats.py), written BEFORE the rename
+        # so a committed batch always carries its stats; best-effort —
+        # reads fail open on a missing sidecar
+        try:
+            sidecar = _zm.write_sidecar(scratch, list(df.columns), self.spark)
+        except Exception:
+            sidecar = None
+        committed = os.path.join(path, f"{BATCH_COL}={batch_id}")
+        # a collision is a remnant or a twin: a COMPLETE dir may be a
+        # concurrent twin's data; anything else is crash-window garbage
+        # (replace it) — the loop converges because every rename leaves
+        # a complete dir
+        for _ in range(4):
+            try:
+                os.rename(scratch, committed)
+                return "written", sidecar
+            except OSError:
+                if not os.path.isdir(committed):
+                    raise
+                if adopt_twin and _batch_complete(committed):
+                    shutil.rmtree(scratch, ignore_errors=True)
+                    return "twin", None
+                shutil.rmtree(committed, ignore_errors=True)
+        raise OSError(f"batch rename for {batch_id!r} did not converge")
 
     def write(
         self,
@@ -656,7 +673,6 @@ class StagingWarehouse:
         delete time — how compact/rewrite spare concurrent appends."""
         path = self._path(table_name)
         os.makedirs(path, exist_ok=True)
-        direct = self.commit_mode == "direct"
         n_quarantined = 0
         if expectations:
             df, quar_df = _split_expectations(df, expectations)
@@ -673,6 +689,7 @@ class StagingWarehouse:
             0,
             n_quarantined,
         )
+        ids, exp = self._snapshot_state(path)
         # a standing retention marker (expire_snapshots) makes ids at or
         # below the horizon INVISIBLE to read() and DEAD to the next
         # expiry's reap step — an incremental commit that sorts there
@@ -685,32 +702,21 @@ class StagingWarehouse:
         # monotone among later auto ids.  Full refreshes are exempt: the
         # generation swap drops the marker atomically with old
         # membership, so the new id never faces a stale horizon.
-        exp = self._expiry(table_name) if incremental else None
+        if not incremental:
+            exp = None
         if batch_id is not None:
             safe = "".join(c if c.isalnum() or c in "-_." else "-" for c in batch_id)
+            if safe in ids:
+                return noop  # already committed: the idempotent no-op
             committed = os.path.join(path, f"{BATCH_COL}={safe}")
-            man = self._manifest_ids(path)
-            if (man is not None and safe in man) or (
-                man is None and os.path.isdir(committed)
-            ):
-                # already committed (manifest entry, or POSIX rename on a
-                # legacy table): the idempotent no-op
-                return noop
-            if (
-                os.path.isdir(committed)
-                and not direct
-                and incremental
-                and _batch_complete(committed)
-            ):
+            if incremental and _batch_complete(committed):
                 # crash window between data rename and entry creation:
                 # the dir is demonstrably COMPLETE data (parquet files +
                 # the committer's _SUCCESS marker — rename follows the
                 # full write), so the retry HEALS the commit by creating
-                # the entry.  Anything else that looks like a remnant —
-                # direct mode (the write may have died mid-parquet), an
-                # incomplete dir (a delete crashed mid-rmtree), or a
-                # full refresh — is REWRITTEN below instead of adopted
-                # (ADVICE r12 #3).
+                # the entry.  An incomplete dir (a delete crashed
+                # mid-rmtree) or a full refresh's remnant is REWRITTEN
+                # below instead of adopted (ADVICE r12 #3).
                 self._manifest_add(path, safe)
                 return noop
             if exp is not None and safe <= exp["horizon"]:
@@ -734,99 +740,22 @@ class StagingWarehouse:
                 batch_id = f"{exp['base']}.{batch_id}"
 
         committed = os.path.join(path, f"{BATCH_COL}={batch_id}")
-        if direct or not incremental:
-            # the manifest must exist BEFORE data becomes listable: a
-            # direct write lands in the final dir mid-job, and a refresh
-            # needs the generation flip — on a still-legacy table either
-            # would be listing-visible too early.  Seeding reads only
-            # already-committed dirs, so it is safe at any moment.
-            self._manifest_ensure(path)
-        if direct:
-            # rename-free commit (VERDICT r12 #1): parquet lands straight
-            # in the final batch dir — entry-less, hence invisible to the
-            # manifest-resolved read — and the manifest commit below is
-            # the ONLY commit act.  mode=overwrite clears any incomplete
-            # remnant of a crashed earlier attempt.
-            target = committed
-        else:
-            # unique scratch per in-flight write: two concurrent writers
-            # (or a retry racing its crashed twin) with the SAME batch_id
-            # must never share a scratch dir — Spark's overwrite of a
-            # shared dir would clobber the other writer's files mid-flight
-            target = os.path.join(path, f".tmp-{batch_id}-{uuid.uuid4().hex[:8]}")
-        if not partition_by and _local_writable(df):
-            # small driver-local frame: skip the distributed writer (see
-            # _write_local_batch — same committed layout, no Spark job)
-            _write_local_batch(df, target)
-        else:
-            writer = df.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(target)
-
-        has_data = _has_parquet_files(target)
-        sidecar = None
-        if has_data:
-            # zone-map sidecar (operators/stats.py), written BEFORE the
-            # commit act so a committed batch always carries its stats;
-            # best-effort — reads fail open on a missing sidecar
-            from . import stats as _zm
-
-            try:
-                sidecar = _zm.write_sidecar(
-                    target, [f.name for f in df.schema.fields], self.spark
-                )
-            except Exception:
-                sidecar = None
-        if has_data and not direct:
-            # move the finished batch into place.  A collision means a
-            # remnant or a twin: a COMPLETE dir is a concurrent twin's
-            # committed data (use it); an incomplete one is crash-window
-            # garbage (replace it) — the loop converges because every
-            # rename leaves a complete dir.
-            for _ in range(4):
-                try:
-                    os.rename(target, committed)
-                    break
-                except OSError:
-                    if not os.path.isdir(committed):
-                        raise
-                    if _batch_complete(committed):
-                        shutil.rmtree(target, ignore_errors=True)
-                        if incremental:
-                            # lost the commit race: the twin's batch IS
-                            # the committed one — ensure its entry (heals
-                            # the twin's crash window) and degrade to the
-                            # idempotent no-op
-                            self._manifest_add(path, batch_id)
-                            return noop
-                        # refresh: flip the TWIN's data below — our
-                        # sidecar payload described the discarded scratch
-                        # dir, so the report must re-count the twin's
-                        sidecar = None
-                        break
-                    shutil.rmtree(committed, ignore_errors=True)
-            else:
-                raise OSError(
-                    f"batch rename for {batch_id!r} did not converge"
-                )
-        elif not has_data:
-            # empty batch (e.g. an incremental fully removed by the
-            # exactly-once guard): nothing to commit; leave no remnant
-            shutil.rmtree(target, ignore_errors=True)
-
-        n = 0
+        status, sidecar = self._stage_batch(
+            df, path, batch_id, partition_by=partition_by, adopt_twin=True
+        )
+        if status == "twin" and incremental:
+            # lost the commit race: the twin's batch IS the committed one
+            # — ensure its entry (heals the twin's crash window) and
+            # degrade to the idempotent no-op
+            self._manifest_add(path, batch_id)
+            return noop
+        has_data = status != "empty"
         if incremental:
-            if has_data:
-                self._manifest_add(path, batch_id)  # THE commit point
-                # committed row count: the sidecar already summed every
-                # file's footer num_rows (identical to what the count
-                # job reads) — only a failed sidecar pays the Spark job
-                n = (
-                    sidecar["rows"]
-                    if sidecar is not None
-                    else self.spark.read.parquet(committed).count()
-                )
+            if not has_data:
+                # empty batch (e.g. an incremental fully removed by the
+                # exactly-once guard): nothing to commit
+                return noop
+            self._manifest_add(path, batch_id)  # THE commit point
         else:
             # replace semantics = ONE atomic generation flip (VERDICT r12
             # #4): the new batch appears, the doomed batches disappear,
@@ -836,30 +765,30 @@ class StagingWarehouse:
             # _replace_only (compact/rewrite), drop exactly the basis the
             # rewrite read — a batch a concurrent appender committed
             # meanwhile is NOT part of the rewritten state and survives
-            # (the swap's sweep + the appender's re-check carry it over).
+            # (the swap's sweeps + the appender's re-check carry it over).
+            # A refresh that lost its rename to a twin flips the twin's
+            # complete data.
             doomed = self._batches(path) if _replace_only is None else _replace_only
             self._manifest_swap(
                 path,
                 [batch_id] if has_data else [],
                 {d.split("=", 1)[1] for d in doomed},
             )
-            # the legacy root marker (pre-generation layout) is stale the
-            # moment the flip lands; generation tables dropped theirs in
-            # the swap itself
-            marker = os.path.join(path, EXPIRY_META)
-            if os.path.isfile(marker):
-                os.remove(marker)
             # data reclamation — pure garbage collection of now-invisible
             # dirs (ignore_errors: a basis dir may have been reaped by a
             # racing expiry's step 1)
             for d in doomed:
                 shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-            if has_data:
-                n = (
-                    sidecar["rows"]
-                    if sidecar is not None
-                    else self.spark.read.parquet(committed).count()
-                )
+        # committed row count: the sidecar already summed every file's
+        # footer num_rows (identical to what the count job reads) — only
+        # a failed sidecar or an adopted twin pays the Spark job
+        n = 0
+        if has_data:
+            n = (
+                sidecar["rows"]
+                if sidecar is not None
+                else self.spark.read.parquet(committed).count()
+            )
         return WriteReport(
             entity_name or table_name,
             STG_PREFIX + table_name.lower(),
@@ -1128,16 +1057,13 @@ class StagingWarehouse:
             for d in self._batches(path)
         }
 
-    def _visible_ids(self, table_name: str, as_of=None) -> list[str] | None:
+    def _visible_ids(self, table_name: str, as_of=None) -> list[str]:
         """The batch ids a ``read(raw=True, as_of=...)`` would scan —
         the PURE-PYTHON mirror of ``_visible``'s marker/as_of predicates
         (which are batch-partition filters, so they resolve exactly on
-        ids).  ``None`` for legacy listing-fallback tables."""
+        ids)."""
         path = self._path(table_name)
         ids, exp = self._snapshot_state(path)
-        if ids is None:
-            listed = self._listed(path)
-            ids = {d.split("=", 1)[1] for d in listed}
         live = set(ids)
         if exp:
             live = {
@@ -1169,8 +1095,8 @@ class StagingWarehouse:
         ``read(raw=True, as_of=...).count()`` (on an upsert table the
         LOGICAL newest-wins count is smaller — use ``read().count()``
         for that).  Returns ``None`` when any visible batch lacks a
-        sidecar (legacy batch or unreadable footer) — honest refusal,
-        never a guess."""
+        sidecar (a failed sidecar write or unreadable footer) — honest
+        refusal, never a guess."""
         from . import stats as _zm
 
         path = self._path(table_name)
@@ -1190,7 +1116,7 @@ class StagingWarehouse:
         (date-spine bounds for gap fill, watermark sanity checks, split
         points) without a table scan.  ``None`` when any visible batch
         carrying the column lacks a usable envelope (no stats, NaN
-        bounds, legacy batch) — the caller falls back to the exact
+        bounds, failed sidecar write) — the caller falls back to the exact
         aggregate.  Batches whose schema lacks the column contribute
         only NULLs and are skipped (min/max ignore NULLs)."""
         from . import stats as _zm
@@ -1335,7 +1261,6 @@ class StagingWarehouse:
         }
         if not committed:
             return out
-        self._manifest_ensure(path)  # the swap needs manifest machinery
         marker = self._expiry(table_name)
         candidates = []  # (dir, clean_rels | None) — None = rewrite wholly
         for d in committed:
@@ -1367,10 +1292,10 @@ class StagingWarehouse:
         for d, clean in candidates:
             bid = d.split("=", 1)[1]
             src = os.path.join(path, d)
+            before = _zm.load_sidecar(src)
             if clean:
                 # surgical: read ONLY the files that may hold matches
-                sc = _zm.load_sidecar(src)
-                dirty = [r for r in sc["files"] if r not in set(clean)]
+                dirty = [r for r in before["files"] if r not in set(clean)]
                 out["files_carried"] += len(clean)
                 out["files_rewritten"] += len(dirty)
                 scan = reader.parquet(*(os.path.join(src, r) for r in dirty))
@@ -1394,68 +1319,36 @@ class StagingWarehouse:
                 nid = core + suffix + BASE_SUFFIX
             else:
                 nid = bid + suffix
-            part_cols = self._nested_partition_cols(src)
-            target = os.path.join(path, f"{BATCH_COL}={nid}")
-            if self.commit_mode == "direct":
-                stage = target
-            else:
-                stage = os.path.join(
-                    path, f".tmp-del-{uuid.uuid4().hex[:8]}"
-                )
-            writer = keep.write.mode("overwrite")
-            if part_cols:
-                writer = writer.partitionBy(*part_cols)
-            writer.parquet(stage)
-            if clean:
-                # carry the provably-clean files verbatim: hard link
-                # (same filesystem by construction), copy as fallback —
-                # never read, decoded, or re-encoded
-                for rel in clean:
-                    dst = os.path.join(stage, rel)
-                    os.makedirs(os.path.dirname(dst), exist_ok=True)
-                    if os.path.exists(dst):  # name clash (never in practice)
-                        head, tail = os.path.split(dst)
-                        dst = os.path.join(
-                            head, f"carried-{uuid.uuid4().hex[:6]}-{tail}"
-                        )
-                    try:
-                        os.link(os.path.join(src, rel), dst)
-                    except OSError:
-                        shutil.copy2(os.path.join(src, rel), dst)
-            before = _zm.load_sidecar(src)
             n_before = (
                 before["rows"]
                 if before is not None
                 else self.spark.read.parquet(src).count()
             )
-            side = None
-            if _has_parquet_files(stage):
-                try:
-                    side = _zm.write_sidecar(
-                        stage, [f.name for f in keep.schema.fields], self.spark
-                    )
-                except Exception:
-                    pass
-            n_after = (
-                side["rows"]
-                if side is not None
-                else (
-                    self.spark.read.parquet(stage).count()
-                    if _has_parquet_files(stage)
-                    else 0
-                )
+            status, side = self._stage_batch(
+                keep,
+                path,
+                nid,
+                partition_by=self._nested_partition_cols(src),
+                carry=(src, clean) if clean else None,
             )
+            target = os.path.join(path, f"{BATCH_COL}={nid}")
+            n_after = 0
+            if status != "empty":
+                n_after = (
+                    side["rows"]
+                    if side is not None
+                    else self.spark.read.parquet(target).count()
+                )
             if n_after > 0:
-                if stage is not target:
-                    os.rename(stage, target)
                 adds.append(nid)
                 out["batches_rewritten"] += 1
                 if new_marker and bid == new_marker.get("base"):
                     new_marker["base"] = nid
             else:
                 # every row of the batch matched (an empty part file may
-                # remain): drop the batch outright
-                shutil.rmtree(stage, ignore_errors=True)
+                # remain): drop the batch outright — the uncommitted dir
+                # is invisible garbage
+                shutil.rmtree(target, ignore_errors=True)
                 out["batches_dropped"] += 1
                 if new_marker and bid == new_marker.get("base"):
                     # the whole retention base deleted: the horizon state
@@ -1467,9 +1360,6 @@ class StagingWarehouse:
         if drops:
             # ONE visibility flip for the whole delete, marker carried
             self._manifest_swap(path, adds, drops, marker=new_marker)
-            stale_root = os.path.join(path, EXPIRY_META)
-            if os.path.isfile(stale_root):
-                os.remove(stale_root)
             for bid in drops:
                 shutil.rmtree(
                     os.path.join(path, f"{BATCH_COL}={bid}"),
@@ -1650,14 +1540,16 @@ class StagingWarehouse:
 
         lo = self._as_of_cutoff(from_snapshot)
         hi = self._as_of_cutoff(to_snapshot)
-        exp = self._expiry(table_name)
+        # ids and marker from ONE generation snapshot, as in _visible
+        path = self._path(table_name)
+        ids, exp = self._snapshot_state(path)
         if exp and lo < exp["horizon"]:
             raise SnapshotExpiredError(
                 f"append change feed of {table_name!r} from {lo!r} predates "
                 f"the retention horizon {exp['horizon']!r} set by "
                 "expire_snapshots — the per-batch history below it is folded"
             )
-        df = self._read_committed(table_name)
+        df = self._read_dirs(path, ids)
         # the retention base never qualifies: its content is the state
         # AT the horizon, and lo >= horizon is enforced above (the same
         # suffix filter also hides an uncommitted crash-window base)
@@ -1700,10 +1592,10 @@ class StagingWarehouse:
             return json.load(f)
 
     def _expiry(self, table_name: str) -> dict | None:
-        """The standing retention marker: inside the live manifest
-        generation on generation-layout tables (so a refresh swap drops
-        it atomically with old membership), at the table root before."""
-        return self._read_marker(self._marker_path(self._path(table_name)))
+        """The standing retention marker, read from the live manifest
+        generation (so a refresh swap drops it atomically with old
+        membership)."""
+        return self._snapshot_state(self._path(table_name))[1]
 
     def _live_ids(self, table_name: str) -> list[str]:
         """Committed batch ids VISIBLE under the expiry marker, commit-
@@ -1712,10 +1604,13 @@ class StagingWarehouse:
         (an unreferenced one is a crashed expiry attempt — readers must
         keep seeing the pre-expiry state), and a non-base id at or below
         the horizon is dead history awaiting deletion."""
-        exp = self._expiry(table_name)
+        path = self._path(table_name)
+        ids, exp = self._snapshot_state(path)
         out = []
-        for d in self._batches(self._path(table_name)):
+        for d in self._listed(path):
             bid = d.split("=", 1)[1]
+            if bid not in ids:
+                continue
             if bid.endswith(BASE_SUFFIX):
                 if exp and bid == exp["base"]:
                     out.append(bid)
@@ -1845,61 +1740,26 @@ class StagingWarehouse:
         part_cols = self._nested_partition_cols(
             os.path.join(path, f"{BATCH_COL}={doomed[0]}")
         )
-        base_path = os.path.join(path, f"{BATCH_COL}={base_id}")
-        writer = folded.drop(BATCH_COL).write.mode("overwrite")
-        if part_cols:
-            writer = writer.partitionBy(*part_cols)
-        base_cols = [f.name for f in folded.schema.fields if f.name != BATCH_COL]
-
-        def _base_sidecar(target: str) -> None:
-            # zone-map sidecar for the folded base, same discipline as
-            # write(): before the commit act, best-effort
-            from . import stats as _zm
-
-            try:
-                _zm.write_sidecar(target, base_cols, self.spark)
-            except Exception:
-                pass
-
-        if self.commit_mode == "direct":
-            # rename-free: the base is written straight into its final
-            # dir — safe because an unreferenced (and entry-less) base is
-            # INVISIBLE to every reader until the marker commits it, and
-            # mode=overwrite converges over a crashed pass's remnant
-            writer.parquet(base_path)
-            _base_sidecar(base_path)
-        else:
-            tmp = os.path.join(path, f".tmp-expire-{uuid.uuid4().hex[:8]}")
-            writer.parquet(tmp)
-            _base_sidecar(tmp)
-            try:
-                os.rename(tmp, base_path)
-            except OSError:
-                if os.path.isdir(base_path):
-                    # an unreferenced base already sits at this horizon —
-                    # a crashed pass's leftover inside the reap fence
-                    # window (or an out-of-contract concurrent twin).
-                    # Unreferenced bases are INVISIBLE to every reader,
-                    # so replacing it is safe at any moment — and unlike
-                    # trusting its content, replacement converges even
-                    # from a corrupted orphan
-                    shutil.rmtree(base_path, ignore_errors=True)
-                    os.rename(tmp, base_path)
-                else:
-                    raise
+        # an unreferenced base already at this name is a crashed pass's
+        # leftover inside the reap fence window (or an out-of-contract
+        # concurrent twin): unreferenced bases are INVISIBLE to every
+        # reader, so replacing it is safe at any moment — and unlike
+        # trusting its content, replacement converges even from a
+        # corrupted orphan
+        self._stage_batch(folded.drop(BATCH_COL), path, base_id, partition_by=part_cols)
         # the base's manifest entry must land BEFORE the marker commits
         # the expiry: a marker referencing an unmanifested base would
         # read as a gap (base invisible, history dead).  Before the
         # marker the entry is harmless — unreferenced bases are
         # invisible to every reader regardless of membership.
-        if os.path.isdir(os.path.join(path, MANIFEST_DIR)):
-            self._manifest_add(path, base_id)
+        self._manifest_add(path, base_id)
 
         # step 4: THE commit — atomic marker replace flips visibility.
-        # On generation-layout tables the marker lives INSIDE the live
-        # generation dir (see _marker_path), so a later refresh swap
-        # drops it atomically with old membership.
-        marker_path = self._marker_path(path)
+        # The marker lives INSIDE the live generation dir, so a later
+        # refresh swap drops it atomically with old membership.
+        marker_path = os.path.join(
+            self._entries_dir(os.path.join(path, MANIFEST_DIR)), EXPIRY_META
+        )
         marker_tmp = marker_path + ".tmp"
         with open(marker_tmp, "w") as f:
             json.dump({"horizon": horizon, "base": base_id}, f)
@@ -1930,44 +1790,34 @@ class StagingWarehouse:
             part_cols.append(subs[0].split("=", 1)[0])
             probe = os.path.join(probe, subs[0])
 
-    def _read_dirs(
-        self, path: str, ids: set[str] | None, prune=None
-    ) -> DataFrame:
-        """Physical read of exactly the COMMITTED batches.  With a
-        manifest (``ids`` a set), the read is over explicit resolved
-        paths (``basePath`` keeps the partition column): an uncommitted
-        or half-deleted dir never even reaches Spark's file listing or
-        mergeSchema footer pass — the object-store-safe read path.
-        Legacy tables (``ids is None``) read the table root, where the
-        POSIX rename protocol already guarantees every listed dir is
-        whole.
+    def _read_dirs(self, path: str, ids: set[str], prune=None) -> DataFrame:
+        """Physical read of exactly the COMMITTED batches ``ids``, over
+        explicit resolved paths (``basePath`` keeps the partition
+        column): an uncommitted or half-deleted dir never even reaches
+        Spark's file listing or mergeSchema footer pass.
 
-        A manifest table with NO committed batches but listable batch
-        dirs raises ``StagingReadError`` instead of falling back to the
-        root listing — the fallback would expose crash-window or
-        half-deleted data (ADVICE r12 #1).  With nothing listable either
-        the root read keeps its natural "unable to infer schema"
-        failure mode.
+        A table with NO committed batch raises ``StagingReadError`` —
+        nothing is read from a listing of the table root, which would
+        expose crash-window or half-deleted data (ADVICE r12 #1).
 
-        mergeSchema unions the batch schemas either way: a column added
-        by a later incremental batch appears (null-filled for older
-        rows) instead of silently vanishing when Spark picks one batch's
-        footer as THE schema."""
-        reader = self.spark.read.option("mergeSchema", "true")
-        if ids is None:
-            return reader.parquet(path)
-        committed = [d for d in self._listed(path) if d.split("=", 1)[1] in ids]
+        mergeSchema unions the batch schemas: a column added by a later
+        incremental batch appears (null-filled for older rows) instead
+        of silently vanishing when Spark picks one batch's footer as THE
+        schema."""
+        listed = self._listed(path)
+        committed = [d for d in listed if d.split("=", 1)[1] in ids]
         if not committed:
-            if self._listed(path):
-                raise StagingReadError(
-                    f"{path} has a manifest but no committed batches, and "
-                    f"{len(self._listed(path))} uncommitted ingest_batch= "
-                    "dir(s) are present — refusing the root-listing "
-                    "fallback (it would expose crash-window or "
-                    "half-deleted data); repair_manifest(adopt=True) to "
-                    "recover, or vacuum to reap"
+            raise StagingReadError(
+                f"{path} has no committed batch"
+                + (
+                    f"; {len(listed)} uncommitted ingest_batch= dir(s) are "
+                    "present — repair_manifest(adopt=True) to recover, or "
+                    "vacuum to reap"
+                    if listed
+                    else ""
                 )
-            return reader.parquet(path)
+            )
+        reader = self.spark.read.option("mergeSchema", "true")
         if prune:
             # zone-map data skipping (operators/stats.py): drop batches
             # and files whose sidecar min/max disprove the conjunction —
@@ -1982,10 +1832,6 @@ class StagingWarehouse:
         return reader.option("basePath", path).parquet(
             *(os.path.join(path, d) for d in committed)
         )
-
-    def _read_committed(self, table_name: str) -> DataFrame:
-        path = self._path(table_name)
-        return self._read_dirs(path, self._manifest_ids(path))
 
     @staticmethod
     def _as_of_cutoff(as_of) -> str:
@@ -2051,11 +1897,7 @@ class StagingWarehouse:
                  & (F.col(BATCH_COL) > exp["horizon"]))
                 | (F.col(BATCH_COL) == exp["base"])
             )
-        elif any(
-            d.split("=", 1)[1].endswith(BASE_SUFFIX)
-            for d in self._listed(path)
-            if ids is None or d.split("=", 1)[1] in ids
-        ):
+        elif any(b.endswith(BASE_SUFFIX) for b in ids):
             df = df.filter(~F.col(BATCH_COL).endswith(BASE_SUFFIX))
         if as_of is not None:
             cutoff = self._as_of_cutoff(as_of)
@@ -2179,12 +2021,11 @@ class StagingWarehouse:
     def repair_manifest(self, table_name: str, *, adopt: bool = False) -> dict:
         """Reconcile a table's manifest with its physical dirs.
 
-        Always: seed a missing manifest from the listing (legacy
-        migration without waiting for the next write) and drop GHOST
-        entries (entry whose data dir is gone — external deletion; the
-        protocol itself never produces one because deletes remove the
-        entry first).  Ghosts are harmless to reads (manifest ∩ listing)
-        but pollute ``snapshots()``-adjacent tooling and the next seed.
+        Always: drop GHOST entries (entry whose data dir is gone —
+        external deletion; the protocol itself never produces one
+        because deletes remove the entry first).  Ghosts are harmless to
+        reads (manifest ∩ listing) but pollute ``snapshots()``-adjacent
+        tooling.
 
         ``adopt=True`` additionally commits ENTRY-LESS dirs into the
         manifest.  Deliberately opt-in: an entry-less dir is ambiguous —
@@ -2195,37 +2036,28 @@ class StagingWarehouse:
         the default leans on the commit-point rule (an unmanifested
         batch was never committed) and leaves them for ``vacuum``."""
         path = self._path(table_name)
-        man = self._manifest_ids(path)
+        ids = self._snapshot_state(path)[0]
         listed = {d.split("=", 1)[1] for d in self._listed(path)}
-        if man is None:
-            if listed:
-                # seed == adopt-everything for a legacy table: every
-                # listed dir was POSIX-rename committed
-                self._manifest_add(path, sorted(listed)[-1])
-                man = self._manifest_ids(path) or set()
-            else:
-                return {"seeded": False, "ghosts_removed": [], "adopted": []}
-        ghosts = sorted(man - listed)
+        ghosts = sorted(ids - listed)
         for bid in ghosts:
             self._manifest_remove(path, bid)
-        adopted = []
-        if adopt:
-            for bid in sorted(listed - man):
-                self._manifest_add(path, bid)
-                adopted.append(bid)
-        return {"seeded": True, "ghosts_removed": ghosts, "adopted": adopted}
+        adopted = sorted(listed - ids) if adopt else []
+        for bid in adopted:
+            self._manifest_add(path, bid)
+        return {"ghosts_removed": ghosts, "adopted": adopted}
 
     def vacuum(
         self, table_name: str | None = None, *, min_age_sec: float = 3600.0
     ) -> list[str]:
         """Remove orphan dirs left by crashed writes: ``.tmp-*`` scratch
-        dirs (died before the commit rename) and — on manifest tables —
-        ENTRY-LESS ``ingest_batch=`` dirs (died in either crash window:
+        dirs (died before the commit rename), ENTRY-LESS
+        ``ingest_batch=`` dirs (died in either crash window:
         post-rename/pre-entry, or post-entry-removal/pre-unlink; both
         are invisible to readers by the manifest ∩ listing rule, so
         reclaiming them is pure space reclamation — the commit-point
         rule says an unmanifested batch was never committed; use
-        ``repair_manifest(adopt=True)`` FIRST to recover one instead).
+        ``repair_manifest(adopt=True)`` FIRST to recover one instead),
+        and manifest generations ``CURRENT`` does not name.
 
         ``min_age_sec`` guards the race with an IN-FLIGHT write: a scratch
         dir younger than the threshold may still be filling (and a fresh
@@ -2233,8 +2065,6 @@ class StagingWarehouse:
         to land), so it is skipped.  One hour is far past any sane write
         duration for a single batch; tests pass 0 to reap immediately.
         Returns the removed paths."""
-        import time
-
         if table_name is not None:
             tables = [table_name]
         else:
@@ -2253,46 +2083,27 @@ class StagingWarehouse:
             path = self._path(t.removeprefix(STG_PREFIX))
             if not os.path.isdir(path):
                 continue
-            man = self._manifest_ids(path)
+            ids = self._snapshot_state(path)[0]
+            # scratch dirs, and entry-less committed-named dirs:
+            # invisible crash-window garbage (see docstring)
+            candidates = [
+                os.path.join(path, d)
+                for d in os.listdir(path)
+                if d.startswith(".tmp-")
+                or (d.startswith(BATCH_COL + "=") and d.split("=", 1)[1] not in ids)
+            ]
             # manifest-internal garbage: displaced/crashed generation
-            # dirs (.g-tmp-* scratch; g-* not named by CURRENT) and stale
-            # generation-0 root entries once CURRENT exists.  The fence
-            # guards a LIVE maintainer's about-to-flip generation.
+            # dirs (.g-tmp-* scratch; g-* not named by CURRENT).  The
+            # fence guards a LIVE maintainer's about-to-flip generation.
             mdir = os.path.join(path, MANIFEST_DIR)
             if os.path.isdir(mdir):
-                gdir = self._entries_dir(mdir)
-                cur_gen = os.path.basename(gdir) if gdir != mdir else None
-                for d in os.listdir(mdir):
-                    full = os.path.join(mdir, d)
-                    stale_gen = os.path.isdir(full) and d != cur_gen and (
-                        d.startswith("g-") or d.startswith(".g-tmp-")
-                    )
-                    stale_root_entry = (
-                        cur_gen is not None
-                        and d.endswith(".json")
-                        and os.path.isfile(full)
-                    )
-                    if not (stale_gen or stale_root_entry):
-                        continue
-                    try:
-                        if now - os.path.getmtime(full) >= min_age_sec:
-                            if stale_gen:
-                                shutil.rmtree(full, ignore_errors=True)
-                            else:
-                                os.remove(full)
-                            if not os.path.exists(full):
-                                removed.append(full)
-                    except FileNotFoundError:
-                        continue
-            for d in os.listdir(path):
-                if d.startswith(BATCH_COL + "="):
-                    # entry-less committed-named dir on a manifest table:
-                    # invisible crash-window garbage (see docstring)
-                    if man is None or d.split("=", 1)[1] in man:
-                        continue
-                elif not d.startswith(".tmp-"):
-                    continue
-                full = os.path.join(path, d)
+                cur_gen = os.path.basename(self._entries_dir(mdir))
+                candidates += [
+                    os.path.join(mdir, d)
+                    for d in os.listdir(mdir)
+                    if d != cur_gen and d.startswith(("g-", ".g-tmp-"))
+                ]
+            for full in candidates:
                 # a scratch dir can legitimately vanish between listdir and
                 # here (committed via rename, or reaped by a concurrent
                 # vacuum) — skip vanished entries instead of aborting the

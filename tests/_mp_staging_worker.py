@@ -40,10 +40,7 @@ def main() -> None:
 
     spark = get_spark(f"mp-worker-{idx}")
     spark.sparkContext.setLogLevel("ERROR")
-    commit_mode = args.get("commit_mode", "rename")
-    wh = StagingWarehouse(
-        spark, root, account_id=account, commit_mode=commit_mode
-    )
+    wh = StagingWarehouse(spark, root, account_id=account)
 
     def mkdf(lo, hi, ver=0):
         return spark.range(lo, hi).selectExpr(
@@ -59,12 +56,9 @@ def main() -> None:
             lo = (idx * 2 + j) * 100
             wh.write(mkdf(lo, lo + 100), "conc_t", incremental=True)
         # scenario 2: every process races the SAME explicit batch id
-        # (rename mode only — direct mode's contract requires callers to
-        # serialize retries of one explicit id, so the race is skipped)
-        if commit_mode == "rename":
-            out["same_id"] = wh.write(
-                mkdf(0, 200), "same_id", incremental=True, batch_id="replay-1"
-            ).records_written
+        out["same_id"] = wh.write(
+            mkdf(0, 200), "same_id", incremental=True, batch_id="replay-1"
+        ).records_written
         # scenario 3: versioned upsert appends racing a compactor
         for ver in range(idx * 3 + 1, idx * 3 + 4):
             wh.write(mkdf(0, 50, ver=ver), "live", incremental=True)

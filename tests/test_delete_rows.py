@@ -30,9 +30,8 @@ def _file_sig(wh, table):
     return sorted(out)
 
 
-def _banded(spark, tmp_path, mode="rename"):
-    wh = StagingWarehouse(spark, str(tmp_path), account_id="del",
-                          commit_mode=mode)
+def _banded(spark, tmp_path):
+    wh = StagingWarehouse(spark, str(tmp_path), account_id="del")
     for i, bid in enumerate(("b1", "b2", "b3")):
         lo = i * 100
         wh.write(
@@ -44,9 +43,8 @@ def _banded(spark, tmp_path, mode="rename"):
     return wh
 
 
-@pytest.mark.parametrize("mode", ["rename", "direct"])
-def test_delete_prunes_untouched_batches(spark, tmp_path, mode):
-    wh = _banded(spark, tmp_path / mode, mode)
+def test_delete_prunes_untouched_batches(spark, tmp_path):
+    wh = _banded(spark, tmp_path)
     before_sig = {
         p: s for p, s, m in _file_sig(wh, "t") if f"{BATCH_COL}=b1" in p
     }

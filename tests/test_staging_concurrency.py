@@ -236,4 +236,4 @@ def test_append_between_sweep_and_flip_survives_swap(tmp_path, monkeypatch):
     monkeypatch.setattr(StagingWarehouse, "_entry_names", staticmethod(entry_names))
     wh._manifest_swap(path, ["c"], {"a"})
     monkeypatch.undo()
-    assert wh._manifest_ids(path) == {"c", "late"}
+    assert wh._snapshot_state(path)[0] == {"c", "late"}

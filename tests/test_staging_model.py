@@ -209,7 +209,7 @@ class ModelledTable:
         self.wh, self.table, self.schema = wh, table, schema
         self.path = wh._path(table)
         self.model = TableModel(len(schema.fields), pk, order)
-        self.seen: list[tuple] = []  # reader states observed mid-swap
+        self._pending = None  # an injected append the model has not applied
 
     def _dirs(self) -> set[str]:
         return {d.split("=", 1)[1] for d in self.wh._listed(self.path)}
@@ -223,15 +223,12 @@ class ModelledTable:
         return rep.records_written, self._dirs() - before
 
     # -- ops -------------------------------------------------------------
-    def append(self, rows, batch_id: str | None = None) -> str | None:
+    def append(self, rows, batch_id: str | None = None) -> None:
         n, new = self._write(rows, incremental=True, batch_id=batch_id)
-        assert n == len(rows) and len(new) <= 1 and (rows or n == 0), (n, new)
-        assert new or not rows, new
+        assert n == len(rows) and len(new) <= 1 and (new or not rows), (n, new)
         if batch_id is not None and new:
             assert new == {batch_id}
-        bid = next(iter(new), None)
-        self.model.append(bid, rows)
-        return bid
+        self.model.append(next(iter(new), None), rows)
 
     def replay(self, rows, batch_id: str) -> None:
         n, new = self._write(rows, incremental=True, batch_id=batch_id)
@@ -289,11 +286,8 @@ class ModelledTable:
         )
 
     def expire(self, keep_last: int) -> None:
-        before = self._dirs()
         rep = self.wh.expire_snapshots(self.table, keep_last=keep_last)
-        doomed = self.model.expire(keep_last)
-        assert rep["expired"] == doomed, (rep, doomed)
-        assert self._dirs() == set(self.model.batches) or not doomed, before
+        assert rep["expired"] == self.model.expire(keep_last), rep
 
     def delete(self, where, pred, inject=None) -> None:
         rep = {}
@@ -317,7 +311,7 @@ class ModelledTable:
         if inject is None:
             return op()
         point, rows = inject
-        wh, mdir = self.wh, os.path.join(self.path, MANIFEST_DIR)
+        mdir = os.path.join(self.path, MANIFEST_DIR)
         old_state = self._state()
         stale = StagingWarehouse._entries_dir(mdir)
         real_sweep = StagingWarehouse._sweep_entries
@@ -352,9 +346,7 @@ class ModelledTable:
                     fired.append(name)
                     StagingWarehouse._manifest_add = stale_add
                     try:
-                        before = self._dirs()
-                        wh.write(self.df(rows), self.table, incremental=True)
-                        injected.update(self._dirs() - before)
+                        injected.update(self._write(rows, incremental=True)[1])
                     finally:
                         StagingWarehouse._manifest_add = real_add
                     seen.append(self._read_state())
@@ -404,7 +396,7 @@ class ModelledTable:
     def settle(self) -> None:
         """Apply a pending injected append to the model and check every
         reader state seen during the swap was one whole generation."""
-        pending, self._pending = getattr(self, "_pending", None), None
+        pending, self._pending = self._pending, None
         if pending is None:
             return
         (old_ids, old_m), injected, seen, rows = pending

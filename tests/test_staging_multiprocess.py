@@ -32,19 +32,14 @@ import os
 import subprocess
 import sys
 
-import pytest
-
 from priority_data_pipeline_postgres_db_spark.operators.staging import StagingWarehouse
 
 WORKER = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_mp_staging_worker.py")
 
 
-@pytest.mark.parametrize("commit_mode", ["rename", "direct"])
-def test_cross_process_writer_battery(spark, tmp_path, commit_mode):
+def test_cross_process_writer_battery(spark, tmp_path):
     root, account = str(tmp_path), "mp"
-    wh = StagingWarehouse(
-        spark, root, account_id=account, commit_mode=commit_mode
-    )
+    wh = StagingWarehouse(spark, root, account_id=account)
 
     def mkdf(lo, hi, ver=0):
         return spark.range(lo, hi).selectExpr(
@@ -67,7 +62,7 @@ def test_cross_process_writer_battery(spark, tmp_path, commit_mode):
     for idx, role in [(0, "appender"), (1, "appender"), (2, "maintainer")]:
         args = json.dumps(
             {"root": root, "account": account, "role": role, "idx": idx,
-             "n_appenders": 2, "commit_mode": commit_mode}
+             "n_appenders": 2}
         )
         procs.append(
             subprocess.Popen(
@@ -92,18 +87,15 @@ def test_cross_process_writer_battery(spark, tmp_path, commit_mode):
     assert got == list(range(400))
     path = wh._path("conc_t")
     assert not [d for d in os.listdir(path) if d.startswith(".tmp-")]
-    assert wh._manifest_ids(path) == {
+    assert wh._snapshot_state(path)[0] == {
         d.split("=", 1)[1] for d in wh._listed(path)
     }
 
     # scenario 2: exactly-once across PROCESSES on the same batch id
-    # (rename mode only — direct mode's contract requires callers to
-    # serialize retries of one explicit id)
-    if commit_mode == "rename":
-        counts = sorted(results[i]["same_id"] for i in (0, 1))
-        assert counts == [0, 200]
-        assert wh.snapshots("same_id") == ["replay-1"]
-        assert wh.read("same_id").count() == 200
+    counts = sorted(results[i]["same_id"] for i in (0, 1))
+    assert counts == [0, 200]
+    assert wh.snapshots("same_id") == ["replay-1"]
+    assert wh.read("same_id").count() == 200
 
     # scenario 3: compact loop ran against live appends; the logical
     # view is exactly latest-version-per-key (ver 6 everywhere)

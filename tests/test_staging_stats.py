@@ -2,7 +2,7 @@
 
 Pins:
 - semantics: read(where=...) row-identical to read().filter(...) across
-  multi-batch tables, both commit modes, composed with as_of;
+  multi-batch tables, composed with as_of;
 - skipping is REAL: disproved batches/files vanish from inputFiles()
   (batch-level on range-partitioned appends, file-level inside a
   z-ordered rewrite);
@@ -40,8 +40,8 @@ def _batch_of(path: str) -> str:
     return "?"
 
 
-def _three_band_orders(spark, orders, tmp_path, mode="rename"):
-    wh = StagingWarehouse(spark, str(tmp_path), account_id="zm", commit_mode=mode)
+def _three_band_orders(spark, orders, tmp_path):
+    wh = StagingWarehouse(spark, str(tmp_path), account_id="zm")
     od = orders
     wh.write(od.filter(F.col("o_totalprice") < 100000), "orders_zm",
              incremental=True, batch_id="b1")
@@ -55,9 +55,8 @@ def _three_band_orders(spark, orders, tmp_path, mode="rename"):
 
 # ---------------------------------------------------------------- sidecar
 
-@pytest.mark.parametrize("mode", ["rename", "direct"])
-def test_sidecar_written_with_correct_envelope(spark, orders, tmp_path, mode):
-    wh = _three_band_orders(spark, orders, tmp_path / mode, mode)
+def test_sidecar_written_with_correct_envelope(spark, orders, tmp_path):
+    wh = _three_band_orders(spark, orders, tmp_path)
     stats = wh.table_stats("orders_zm")
     assert set(stats) == {"b1", "b2", "b3"}
     for bid, hi in [("b1", 100000), ("b2", 200000)]:
@@ -88,9 +87,8 @@ def test_sidecar_survives_compact_and_refresh(spark, orders, tmp_path):
 
 # ------------------------------------------------------------- semantics
 
-@pytest.mark.parametrize("mode", ["rename", "direct"])
-def test_where_equals_filter(spark, orders, tmp_path, mode):
-    wh = _three_band_orders(spark, orders, tmp_path / mode, mode)
+def test_where_equals_filter(spark, orders, tmp_path):
+    wh = _three_band_orders(spark, orders, tmp_path)
     where = [("o_totalprice", ">=", 150000.0)]
     got = wh.read("orders_zm", where=where)
     want = wh.read("orders_zm").filter(F.col("o_totalprice") >= 150000.0)
@@ -146,9 +144,8 @@ def test_all_batches_pruned_keeps_schema_zero_rows(spark, orders, tmp_path):
 
 # -------------------------------------------------------------- skipping
 
-@pytest.mark.parametrize("mode", ["rename", "direct"])
-def test_batch_pruning_from_file_listing(spark, orders, tmp_path, mode):
-    wh = _three_band_orders(spark, orders, tmp_path / mode, mode)
+def test_batch_pruning_from_file_listing(spark, orders, tmp_path):
+    wh = _three_band_orders(spark, orders, tmp_path)
     df = wh.read("orders_zm", where=[("o_totalprice", ">=", 210000.0)])
     touched = {_batch_of(p) for p in df.inputFiles()}
     assert touched == {"b3"}  # b1/b2 pruned before the listing
