@@ -3604,7 +3604,10 @@ def _oriented_edges_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     wh = StagingWarehouse(
         spark,
         os.path.join(tempfile.gettempdir(), "spark_graft_memo"),
-        account_id="tri_" + sig.hexdigest()[:16],
+        # "gen": the key also names the staging layout the memo is
+        # stored in (generation manifests), so a memo an older build
+        # left in another layout is never read
+        account_id="tri_gen_" + sig.hexdigest()[:16],
     )
     if not wh.exists("oriented_edges"):
         wh.write(
