@@ -255,16 +255,18 @@ class ModelledTable:
         return self._dirs() - before
 
     def compact(self, inject=None) -> None:
+        """``compact`` on the upsert contract; on an append-only table the
+        first column is the key and the second the order column."""
         m = self.model
-        pk = [self.schema.fieldNames()[i] for i in m.pk] if m.pk else ["k"]
-        order = self.schema.fieldNames()[m.order] if m.pk else "ver"
+        pk, order = (m.pk, m.order) if m.pk else ((0,), 1)
+        names = self.schema.fieldNames()
         folded = _newest_wins(
-            [(r, b) for b in m.snapshots() for r in m.batches[b]],
-            m.pk or (0,),
-            m.order if m.pk else 1,
+            [(r, b) for b in m.snapshots() for r in m.batches[b]], pk, order
         )
         self._rewrite(
-            lambda: self.wh.compact(self.table, pk=pk, order_col=order),
+            lambda: self.wh.compact(
+                self.table, pk=[names[i] for i in pk], order_col=names[order]
+            ),
             folded,
             inject,
         )
