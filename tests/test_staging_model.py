@@ -42,6 +42,7 @@ from priority_data_pipeline_postgres_db_spark.operators.staging import (
     BASE_SUFFIX,
     MANIFEST_CURRENT,
     MANIFEST_DIR,
+    StagingReadError,
     StagingWarehouse,
 )
 
@@ -243,11 +244,13 @@ class ModelledTable:
         new = self._swap(op, inject)
         assert len(new) <= 1 and (new or not rows), new
         self.model.collapse(next(iter(new), None), rows)
+        self._settle()
 
     def _rewrite(self, op, rows, inject) -> None:
         new = self._swap(lambda: self._new_after(op), inject)
         assert len(new) == 1, new
         self.model.collapse(new.pop(), rows)
+        self._settle()
 
     def _new_after(self, op) -> set[str]:
         before = self._dirs()
@@ -302,6 +305,7 @@ class ModelledTable:
         new = self._swap(op, inject)
         deleted = self.model.delete(pred, new, self._dirs())
         assert rep["rows_deleted"] == deleted, (rep, deleted)
+        self._settle()
 
     # -- one append injected into a generation swap ----------------------
     def _swap(self, op, inject) -> set[str]:
@@ -309,7 +313,7 @@ class ModelledTable:
         return the batch ids it created.  With ``inject=(point, rows)``
         one append of ``rows`` lands at ``point`` of the swap; the model
         applies it after ``op`` (the append's id sorts after every id
-        the op created)."""
+        the op created, see ``_settle``)."""
         if inject is None:
             return op()
         point, rows = inject
@@ -395,7 +399,7 @@ class ModelledTable:
         ids, exp = self.wh._snapshot_state(self.path)
         return frozenset(ids), exp and tuple(sorted(exp.items()))
 
-    def settle(self) -> None:
+    def _settle(self) -> None:
         """Apply a pending injected append to the model and check every
         reader state seen during the swap was one whole generation."""
         pending, self._pending = self._pending, None
@@ -422,8 +426,8 @@ class ModelledTable:
         assert wh.exists(t) == bool(snaps)
         assert self._read_state() == self._state()
         if not snaps:
-            with pytest.raises(Exception):
-                wh.read(t).collect()
+            with pytest.raises(StagingReadError):
+                wh.read(t)
             return
 
         def rows(df):
@@ -502,19 +506,16 @@ class StagingMachine(RuleBasedStateMachine):
     @rule(rows=st.lists(ROW, max_size=3), point=POINT, inj=ROWS)
     def full_refresh(self, rows, point, inj):
         self.t.refresh(rows, inject=self._inject(point, inj))
-        self.t.settle()
 
     @precondition(_nonempty)
     @rule(point=POINT, inj=ROWS)
     def compact(self, point, inj):
         self.t.compact(inject=self._inject(point, inj))
-        self.t.settle()
 
     @precondition(_nonempty)
     @rule(point=POINT, inj=ROWS)
     def rewrite_compact_files(self, point, inj):
         self.t.rewrite_compact_files(inject=self._inject(point, inj))
-        self.t.settle()
 
     @precondition(_nonempty)
     @rule(keep_last=st.integers(1, 3))
@@ -529,7 +530,6 @@ class StagingMachine(RuleBasedStateMachine):
             lambda r: r[0] == key,
             inject=self._inject(point, inj),
         )
-        self.t.settle()
 
     @invariant()
     def matches_model(self):
