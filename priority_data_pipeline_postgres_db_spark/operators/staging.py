@@ -536,6 +536,7 @@ class StagingWarehouse:
         partition_by: list[str] | None = None,
         carry: tuple[str, list[str]] | None = None,
         adopt_twin: bool = False,
+        drop_empty: bool = False,
     ) -> tuple[str, dict | None]:
         """Write ``df`` as the physical batch ``ingest_batch=<batch_id>``:
         parquet into a fresh hidden scratch dir (a driver-side write for
@@ -545,7 +546,9 @@ class StagingWarehouse:
         manifest act.
 
         Returns ``(status, sidecar)``: ``"empty"`` when no parquet file
-        was written (the scratch dir is removed, nothing renamed),
+        was written, or with ``drop_empty`` when the sidecar counts 0 rows
+        (Spark leaves one schema-only file for an empty frame); the
+        scratch dir is removed and nothing renamed.
         ``"twin"`` when ``adopt_twin`` and a complete dir already holds
         the name (a concurrent twin's data; the scratch dir is
         discarded), else ``"written"``.  Any other dir at the name is
@@ -591,6 +594,9 @@ class StagingWarehouse:
             sidecar = _zm.write_sidecar(scratch, list(df.columns), self.spark)
         except Exception:
             sidecar = None
+        if drop_empty and sidecar is not None and sidecar["rows"] == 0:
+            shutil.rmtree(scratch, ignore_errors=True)
+            return "empty", None
         committed = os.path.join(path, f"{BATCH_COL}={batch_id}")
         # a collision is a remnant or a twin: a COMPLETE dir may be a
         # concurrent twin's data; anything else is crash-window garbage
@@ -740,8 +746,16 @@ class StagingWarehouse:
                 batch_id = f"{exp['base']}.{batch_id}"
 
         committed = os.path.join(path, f"{BATCH_COL}={batch_id}")
+        # an empty incremental into a table that already has a schema
+        # commits nothing; a table's first write commits even with 0 rows,
+        # so the table keeps its schema
         status, sidecar = self._stage_batch(
-            df, path, batch_id, partition_by=partition_by, adopt_twin=True
+            df,
+            path,
+            batch_id,
+            partition_by=partition_by,
+            adopt_twin=True,
+            drop_empty=incremental and bool(ids),
         )
         if status == "twin" and incremental:
             # lost the commit race: the twin's batch IS the committed one

@@ -7,10 +7,16 @@ re-expressed as a source Structured Streaming MANAGES: the consumer
 offset is a batch id living in the checkpoint instead of the control
 store, retried micro-batches replay EXACTLY (``partitions(start, end)``
 is a pure function of the offsets over immutable committed batches), and
-downstream gets foreachBatch sinks / watermarks / AvailableNow for free —
-the Structured Streaming twin of the reference's refresh-every-N-minutes
+downstream gets foreachBatch sinks and watermarks for free — the
+Structured Streaming twin of the reference's refresh-every-N-minutes
 loop (priorityDataSource.py lastRun), pointed at a warehouse table
 instead of an OData entity.
+
+``trigger(availableNow=True)`` is not AvailableNow here: PySpark 4.1.2
+Python stream sources do not support ``Trigger.AvailableNow``, and every
+such trigger logs "Falling back to single batch execution".  So a query
+restarted after an uncommitted batch applies only that batch in its
+first trigger; batches committed after it wait for the next trigger.
 
 Semantics = the append-only change feed (``_table_changes_append``):
 every committed batch is immutable, so the rows between two offsets are

@@ -83,6 +83,29 @@ def test_empty_incremental_append_commits_nothing(spark, orders, tmp_path):
     assert wh.read("orders").count() == 5
 
 
+def test_empty_spark_written_incremental_commits_nothing(spark, tmp_path):
+    """Spark leaves one schema-only parquet file for an empty frame (a
+    timestamp column keeps it off the driver-local writer).  Appended to
+    a table, it commits nothing: no new batch dir, no new snapshot.  A
+    table's first write commits even with 0 rows, so the table keeps its
+    schema."""
+    wh = StagingWarehouse(spark, str(tmp_path), account_id="t5e")
+    schema = "k long, ts timestamp"
+    empty = spark.createDataFrame([], schema)
+    assert wh.write(empty, "FIRST", incremental=True, batch_id="b0").records_written == 0
+    assert wh.snapshots("first") == ["b0"]
+    assert wh.read("first").schema == empty.schema
+
+    wh.write(spark.sql("SELECT 1L AS k, TIMESTAMP'2024-01-01' AS ts"), "E", incremental=True, batch_id="b0")
+    path, snaps = wh._path("E"), wh.snapshots("e")
+    dirs = sorted(d for d in os.listdir(path) if d.startswith("ingest_batch="))
+    for batch_id in ("b1", None):
+        assert wh.write(empty, "E", incremental=True, batch_id=batch_id).records_written == 0
+    assert sorted(d for d in os.listdir(path) if d.startswith("ingest_batch=")) == dirs
+    assert wh.snapshots("e") == snaps
+    assert wh.read("e").count() == 1
+
+
 def test_partitioned_staging_layout_and_pruning(spark, tmp_path, sf_dir):
     """Hive-partitioned staging: directory layout by derived date column,
     and a date-bounded read prunes to the matching partitions."""

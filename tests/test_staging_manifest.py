@@ -59,20 +59,24 @@ def test_torn_manifest_append_is_invisible(spark, orders, tmp_path):
     wh = StagingWarehouse(spark, str(tmp_path), account_id="m3")
     wh.write(orders.limit(6), "ORDERS", incremental=False)
     before = _rows(wh.read("orders"))
-    mdir = os.path.join(_tdir(wh, "orders"), MANIFEST_DIR)
+    snaps = wh.snapshots("orders")
+    # both plants go into the live generation CURRENT names, the only
+    # dir readers list
+    gdir = StagingWarehouse._entries_dir(os.path.join(_tdir(wh, "orders"), MANIFEST_DIR))
     # torn append: partial JSON under the hidden tmp name os.replace
     # would have consumed
-    with open(os.path.join(mdir, ".deadbeef.tmp"), "w") as fh:
+    with open(os.path.join(gdir, ".deadbeef.tmp"), "w") as fh:
         fh.write('{"batch": "01234')
     assert _rows(wh.read("orders")) == before
-    assert wh.snapshots("orders") == sorted(_entries(wh, "orders"))
+    assert wh.snapshots("orders") == snaps
     # and a torn entry with a valid-looking name but garbage content is
     # still a committed id (name-as-membership): prove content is never
     # parsed by reads
-    bid = next(iter(_entries(wh, "orders")))
-    with open(os.path.join(mdir, bid + ".json"), "w") as fh:
+    (bid,) = _entries(wh, "orders")
+    with open(os.path.join(gdir, bid + ".json"), "w") as fh:
         fh.write("GARBAGE NOT JSON")
     assert _rows(wh.read("orders")) == before
+    assert wh.snapshots("orders") == snaps
 
 
 def test_entryless_dir_invisible_and_retry_heals(spark, orders, tmp_path):
